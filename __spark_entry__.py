@@ -31,7 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datafusion_spatial_spark.operators.dedup import word_shingles_duckdb
+from datafusion_spatial_spark.operators.dedup import let, word_shingles_duckdb
 from datafusion_spatial_spark.operators.hashing import (
     P,
     minhash_affine_params,
@@ -2459,18 +2459,21 @@ def _chunked_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     start indices 1, 9, ... strictly below ``len(w) - (LINE_WORDS - 1)``,
     matching DuckDB ``range(1, len(w) - 7, 8)`` which is stop-exclusive)."""
     docs = load_table(spark, sf_dir, "documents")
-    w = F.split(F.trim(F.col("text")), r"\s+")
-    last_excl = F.size(w) - F.lit(LINE_WORDS - 1)
-    starts = F.when(
-        last_excl > 1,
-        F.sequence(F.lit(1), last_excl - F.lit(1), F.lit(LINE_WORDS)),
-    ).otherwise(F.array().cast("array<int>"))
-    content = F.concat_ws(
-        "\n",
-        F.transform(
-            starts, lambda i: F.concat_ws(" ", F.slice(w, i, LINE_WORDS))
-        ),
-    )
+
+    def lines(w):  # w: the word array, split once per row (dedup.let)
+        last_excl = F.size(w) - F.lit(LINE_WORDS - 1)
+        starts = F.when(
+            last_excl > 1,
+            F.sequence(F.lit(1), last_excl - F.lit(1), F.lit(LINE_WORDS)),
+        ).otherwise(F.array().cast("array<int>"))
+        return F.concat_ws(
+            "\n",
+            F.transform(
+                starts, lambda i: F.concat_ws(" ", F.slice(w, i, LINE_WORDS))
+            ),
+        )
+
+    content = let(F.split(F.trim(F.col("text")), r"\s+"), lines)
     return docs.select("doc_id", content.alias("content"))
 
 
@@ -3542,9 +3545,12 @@ def _q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             float(x)
             for x in emb.filter(F.col("vec_id") == 0).collect()[0].embedding
         ]
+    # a table with fewer non-null vectors than lists lets the index
+    # collect its own (equally short) pivot set
     assigned, pivots = ivf_index_pivots(
         emb, "embedding", "vec_id", n_lists=N_IVF_LISTS,
-        pivots=[r.embedding for r in prefix[:N_IVF_LISTS]],
+        pivots=[r.embedding for r in prefix[:N_IVF_LISTS]]
+        if len(prefix) >= N_IVF_LISTS else None,
     )
 
     def cos(a, b):

@@ -20,6 +20,14 @@ design (the point, per the build brief):
 Hash choice: ``hash_fn="poly"`` is bit-reproducible in the DuckDB oracle
 (see operators/hashing.py); ``"xxhash64"`` is the fast JVM-native path for
 production. Both are pure Catalyst — no Python UDFs anywhere in dedup.
+
+Rule for every higher-order function here: split once, and never refer to
+a per-row expression inside a lambda body. Catalyst neither shares
+subexpressions across a lambda body nor hoists them out of it, so a
+``split(text)`` referenced inside ``transform(..., i -> ...)`` runs once
+per array element — O(n²) per document for shingling. Bind the per-row
+value to a lambda variable with :func:`let` (or materialize it in an
+earlier projection); a lambda body then refers only to lambda variables.
 """
 
 from __future__ import annotations
@@ -72,26 +80,33 @@ def dedup_exact_canonical(
 # shingling
 
 
+def let(value: Column, body) -> Column:
+    """``body(v)`` with ``v`` bound to ``value``, evaluated once per row.
+
+    ``body`` receives a lambda variable, so any number of references to
+    it inside (nested) lambdas cost a lookup, not a re-evaluation of
+    ``value``. A null ``value`` binds ``v`` to null."""
+    return F.transform(F.array(value), body)[0]
+
+
 def word_shingles(col: Column | str, k: int = 3) -> Column:
     """Array of k-word shingles (space-joined) from whitespace tokenization.
     Pure Catalyst: split + sequence + slice + array_join. Documents shorter
-    than k words yield a single shingle of the whole text."""
+    than k words yield a single shingle of the whole text; a null text
+    yields ``[null]``.
+
+    The split runs once per row: the word array is bound with :func:`let`,
+    so each shingle is an O(k) slice of it (linear in the document)."""
     c = F.col(col) if isinstance(col, str) else col
-    words = F.split(F.trim(c), r"\s+")
-    n = F.size(words)
-    starts = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
-    return F.transform(
-        starts, lambda i: F.array_join(F.slice(words, i, k), " ")
-    )
 
+    def shingles(words: Column) -> Column:
+        n = F.size(words)
+        starts = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
+        return F.transform(
+            starts, lambda i: F.array_join(F.slice(words, i, k), " ")
+        )
 
-def word_shingles_sql(expr: str, k: int = 3) -> str:
-    """Spark SQL text twin of :func:`word_shingles`."""
-    w = f"split(trim({expr}), '\\\\s+')"
-    return (
-        f"transform(sequence(1, greatest(size({w}) - {k - 1}, 1)), "
-        f"i -> array_join(slice({w}, i, {k}), ' '))"
-    )
+    return let(F.split(F.trim(c), r"\s+"), shingles)
 
 
 def word_shingles_duckdb(expr: str, k: int = 3) -> str:

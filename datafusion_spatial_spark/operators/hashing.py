@@ -29,7 +29,9 @@ def _c(col: Column | str) -> Column:
 
 def poly_hash_str(col: Column | str) -> Column:
     """Polynomial hash of a string's code points, mod P (pure Catalyst —
-    whole-stage-codegen'd higher-order functions, no Python).
+    higher-order functions, no Python). Higher-order functions run
+    interpreted: a projection that holds one sits outside any
+    whole-stage-codegen ``*(n)`` stage of the physical plan.
 
     Implementation note: ``split(c, '')`` yields the char array in O(n);
     the earlier per-index ``substring(c, i, 1)`` form was O(n²) per string

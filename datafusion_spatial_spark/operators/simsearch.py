@@ -155,20 +155,34 @@ def cosine_topk(
         # precompute |q| driver-side: it is constant per query, and folding
         # it into a literal removes one array fold per row
         qn = math.sqrt(sum(float(x) * float(x) for x in query)) or 1.0
-        v = _vec(vec_col)
-        raw = dot(v, q) / (norm(v) * F.lit(qn))
+        v = F.col("__v")
+        raw = F.col("__raw")
         return (
-            F.col(id_col),
+            _vec(vec_col).alias("__v"),
+            (dot(v, q) / (norm(v) * F.lit(qn))).alias("__raw"),
             F.when(~F.isnan(raw), raw).alias("score"),
-            F.desc("score"),
-            F.col(id_col),
         )
 
-    idc, score, by1, by2 = cached_columns(
-        ("cosine_topk", vec_col, id_col, tuple(float(x) for x in query)), _build
+    vec, raw, score = cached_columns(
+        ("cosine_topk", vec_col, tuple(float(x) for x in query)), _build
     )
-    scored = df.select(idc, score)
-    return scored.orderBy(by1, by2).limit(k)
+    return _score_topk(df, id_col, vec, raw, score, k)
+
+
+def _score_topk(
+    df: DataFrame, id_col: str, vec: Column, raw: Column, score: Column, k: int
+) -> DataFrame:
+    """Top-k by ``score`` with each stage in its own projection: the cast
+    vector (read by both the dot and the norm fold) and the raw cosine
+    (read by the NaN test and the result) are each computed once per row —
+    Catalyst shares no subexpression under a higher-order function."""
+    return (
+        df.select(F.col(id_col), vec)
+        .select(F.col(id_col), raw)
+        .select(F.col(id_col), score)
+        .orderBy(F.desc("score"), F.col(id_col))
+        .limit(k)
+    )
 
 
 def knn_pairs_bruteforce(
@@ -657,7 +671,9 @@ def ivf_index_pivots(
     ``pivots`` (r16): a caller that already holds the first ``n_lists``
     non-null vectors by ascending id (e.g. from a shared prefix collect)
     passes them to skip this function's own collect — the values MUST be
-    exactly what the collect would return, or assignments shift.
+    exactly what the collect would return, or assignments shift. Given
+    pivots that are fewer than ``n_lists``, hold a ``None`` or an empty
+    vector, or differ in length raise ``ValueError``.
     """
     if pivots is None:
         rows = (
@@ -669,27 +685,48 @@ def ivf_index_pivots(
         )
         pivots = [[float(x) for x in r["__v"]] for r in rows]
     else:
+        _check_pivots(pivots, n_lists)
         pivots = [[float(x) for x in p] for p in pivots[:n_lists]]
     finite = [finite_doubles(p) for p in pivots]
+    # the cast vector is its own projection, computed once per row rather
+    # than once per pivot distance
+    v = "__ivf_v"
     if pivots and all(f is not None for f in finite):
         # r16: the argmin distance array as ONE F.expr string — the
         # Column-API form built n_lists aggregate/zip_with lambda pairs
         # (~1.5 s of py4j for 8×64-dim pivots); tree-identical rendering
-        vs = vec_sql(vec_col)
         scores = F.expr(
             "array("
             + ",".join(
-                sqdist_sql(vs, render_double_array(f)) for f in finite
+                sqdist_sql(quote_col(v), render_double_array(f)) for f in finite
             )
             + ")"
         )
     else:
-        v = _vec(vec_col)
         scores = F.array(
-            *[sqdist(v, lit_double_array(p)) for p in pivots]
+            *[sqdist(F.col(v), lit_double_array(p)) for p in pivots]
         )
     list_id = (F.array_position(scores, F.array_min(scores)) - 1).cast("int")
-    return df.withColumn("list_id", list_id), pivots
+    return (
+        df.withColumn(v, _vec(vec_col))
+        .withColumn("list_id", list_id)
+        .drop(v)
+    ), pivots
+
+
+def _check_pivots(pivots: list, n_lists: int) -> None:
+    if len(pivots) < max(n_lists, 1):
+        raise ValueError(
+            f"ivf_index_pivots: {len(pivots)} pivots given, need n_lists={n_lists}"
+        )
+    used = pivots[:n_lists]
+    if any(p is None or len(p) == 0 or any(x is None for x in p) for p in used):
+        raise ValueError("ivf_index_pivots: pivots contain None or an empty vector")
+    if len({len(p) for p in used}) > 1:
+        raise ValueError(
+            "ivf_index_pivots: pivots are ragged "
+            f"(lengths {sorted({len(p) for p in used})})"
+        )
 
 
 def ivf_topk(
@@ -716,11 +753,12 @@ def ivf_topk(
     ranked = sorted(range(len(centroids)), key=lambda i: -cos(query, centroids[i]))
     probes = ranked[: max(1, nprobe)]
     q = lit_double_array(query)
+    v, raw = F.col("__v"), F.col("__raw")
     cand = assigned.filter(F.col("list_id").isin(probes))
-    return (
-        cand.select(F.col(id_col), cosine(_vec(vec_col), q).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
+    return _score_topk(
+        cand, id_col, _vec(vec_col).alias("__v"),
+        (dot(v, q) / (norm(v) * norm(q))).alias("__raw"),
+        F.when(~F.isnan(raw), raw).alias("score"), k,
     )
 
 

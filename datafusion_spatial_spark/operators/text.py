@@ -299,13 +299,17 @@ def repetition_cols(
     """The aliased per-row repetition columns of :func:`repetition_stats`,
     exposed so shared-scan composites can append them to another
     projection of the same scan (r16)."""
-    from datafusion_spatial_spark.operators.dedup import word_shingles
+    from datafusion_spatial_spark.operators.dedup import let, word_shingles
 
     def dup_frac(arr: Column) -> Column:
-        n = F.size(arr)
-        return F.when(n <= 0, F.lit(0.0)).otherwise(
-            (n - F.size(F.array_distinct(arr))) / n
-        )
+        # bound once: the fraction refers to the array three times
+        def frac(a: Column) -> Column:
+            n = F.size(a)
+            return F.when(n <= 0, F.lit(0.0)).otherwise(
+                (n - F.size(F.array_distinct(a))) / n
+            )
+
+        return let(arr, frac)
 
     # \r?\n (r14, with line_dedup): CRLF text's final line lacks the \r
     # its siblings carry, skewing the distinct count; consume the \r
