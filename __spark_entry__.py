@@ -3241,7 +3241,7 @@ ORDER BY part, k1, k2
 
 
 def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datafusion_spatial_spark.operators.simsearch import cosine, _vec
+    from datafusion_spatial_spark.exprlit import cosine_sql, vec_sql
 
     emb = load_table(spark, sf_dir, "embeddings")
     qfilter, qe, score = _cached_cols(
@@ -3249,7 +3249,9 @@ def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: (
             F.col("vec_id") == 0,
             F.col("embedding").alias("qe"),
-            F.round(cosine(_vec("embedding"), _vec("qe")), 6).alias("score"),
+            F.round(
+                F.expr(cosine_sql(vec_sql("embedding"), vec_sql("qe"))), 6
+            ).alias("score"),
         ),
     )
     q = emb.filter(qfilter).select(qe)
@@ -3290,9 +3292,8 @@ def _q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes both sets and the overlap itself, so a
     pruning bug that silently drops true neighbors now breaks the gate
     even though the 'ann' leg would still match its own mirror."""
+    from datafusion_spatial_spark.exprlit import cosine_sql, vec_sql
     from datafusion_spatial_spark.operators.simsearch import (
-        _vec,
-        cosine,
         lsh_bucket,
         random_hyperplanes,
     )
@@ -3309,7 +3310,9 @@ def _q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann10 = (
         cand.select(
             "vec_id",
-            F.round(cosine(_vec("embedding"), _vec("qe")), 6).alias("score"),
+            F.round(
+                F.expr(cosine_sql(vec_sql("embedding"), vec_sql("qe"))), 6
+            ).alias("score"),
         )
         .orderBy(F.desc("score"), F.col("vec_id"))
         .limit(10)
@@ -3318,7 +3321,9 @@ def _q_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.crossJoin(F.broadcast(q.select("qe")))
         .select(
             "vec_id",
-            F.round(cosine(_vec("embedding"), _vec("qe")), 6).alias("score"),
+            F.round(
+                F.expr(cosine_sql(vec_sql("embedding"), vec_sql("qe"))), 6
+            ).alias("score"),
         )
         .orderBy(F.desc("score"), F.col("vec_id"))
         .limit(10)
@@ -3516,8 +3521,8 @@ def _q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the raw table. Every fold on both sides is sequential-sum
     arithmetic (k-means codebooks stay in tests: their centroid means
     are not bit-stable across engines)."""
+    from datafusion_spatial_spark.exprlit import cosine_sql, vec_sql
     from datafusion_spatial_spark.operators.simsearch import (
-        cosine_lit,
         ivf_index_pivots,
         pq_encode,
         pq_topk,
@@ -3572,7 +3577,9 @@ def _q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned.filter(F.col("list_id").isin(probes))
         .select(
             "vec_id",
-            F.round(cosine_lit("embedding", qvec), 6).alias("score"),
+            F.round(
+                F.expr(cosine_sql(vec_sql("embedding"), qvec)), 6
+            ).alias("score"),
         )
         .orderBy(F.desc("score"), F.col("vec_id"))
         .limit(10)
@@ -3607,7 +3614,10 @@ def _q_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that silently drops true neighbors breaks the gate.
     exact10 = (
         emb.select(
-            "vec_id", F.round(cosine_lit("embedding", qvec), 6).alias("score")
+            "vec_id",
+            F.round(
+                F.expr(cosine_sql(vec_sql("embedding"), qvec)), 6
+            ).alias("score"),
         )
         .orderBy(F.desc("score"), F.col("vec_id"))
         .limit(10)

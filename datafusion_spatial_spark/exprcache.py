@@ -15,9 +15,11 @@ SparkContext restart, so gateway-keyed entries could hand a UDF-bearing
 Column bound to a dead context's state to the new one; context identity
 invalidates on stop/restart as well as JVM death). The cache holds
 EXPRESSION PLANS only — never DataFrames, data, or results — and is
-bounded: entries from dead contexts are purged and the live set is capped
-at ``_MAX_ENTRIES`` with FIFO eviction, so unbounded distinct keys (e.g.
-cosine query vectors) cannot grow driver memory without limit.
+bounded: every insert purges the entries of dead contexts (a scan of at
+most ``_MAX_ENTRIES``, on a miss only) and the live set is capped at
+``_MAX_ENTRIES`` with FIFO eviction, so a stopped context's plans do not
+outlive it and unbounded distinct keys cannot grow driver memory without
+limit.
 
 Callers must only use it when ``key`` fully determines the expression
 (column *names* and plain-value params — never Column objects).
@@ -49,10 +51,9 @@ def cached_columns(key: tuple, build: Callable[[], Any]) -> Any:
     val = build()
     if ctx is None:
         return val  # no live context to bind the plan fragment to
-    if ent is not None or len(_CACHE) >= _MAX_ENTRIES:
-        for k in [k for k, (c, _) in _CACHE.items() if c is not ctx]:
-            del _CACHE[k]  # stale-context purge first
-        while len(_CACHE) >= _MAX_ENTRIES:  # then FIFO cap
-            del _CACHE[next(iter(_CACHE))]
+    for k in [k for k, (c, _) in _CACHE.items() if c is not ctx]:
+        del _CACHE[k]  # stale-context purge first
+    while len(_CACHE) >= _MAX_ENTRIES:  # then FIFO cap
+        del _CACHE[next(iter(_CACHE))]
     _CACHE[key] = (ctx, val)
     return val

@@ -24,26 +24,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datafusion_spatial_spark.exprlit import (
+    cosine_raw_sql,
     cosine_sql,
-    finite_doubles,
-    lit_double_array,
-    lit_double_matrix,
+    dot_sql,
+    norm_sql,
+    not_nan_sql,
     quote_col,
+    render_double,
     render_double_array,
     sqdist_sql,
     vec_sql,
 )
-
-
-def cosine_lit(vec_col: str, query) -> Column:
-    """``cosine(_vec(vec_col), <literal query>)`` rendered as ONE
-    ``F.expr`` string (r16): the Column-API twin costs ~6 higher-order
-    -function constructions (~20 ms of py4j each) per call site. Exact
-    same expression tree; non-finite queries fall back."""
-    vals = finite_doubles(query)
-    if vals is None:
-        return cosine(_vec(vec_col), lit_double_array(query))
-    return F.expr(cosine_sql(vec_sql(vec_col), render_double_array(vals)))
 
 
 # Below this corpus size, cosine_near_dup_pairs/semantic_dedup drop their
@@ -109,34 +100,8 @@ def _bucket_arrays_np(plane_groups: list):
     return udf
 
 
-def _vec(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(c, lambda x: x.cast("double"))
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-order dot product (matches DuckDB list_reduce order)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """NaN-safe cosine: a NaN-contaminated embedding yields NULL, which
-    sorts LAST under desc and fails every >= threshold — Spark otherwise
-    ranks NaN above every number, so one corrupt vector would occupy a
-    top-k slot and 'near-duplicate' its whole bucket (r7 review fix).
-    Zero-norm vectors already yield NULL via non-ANSI division."""
-    raw = dot(a, b) / (norm(a) * norm(b))
-    return F.when(~F.isnan(raw), raw)
+def _vec(col_name: str) -> Column:
+    return F.expr(vec_sql(col_name))
 
 
 def cosine_topk(
@@ -147,39 +112,28 @@ def cosine_topk(
     k: int = 10,
 ) -> DataFrame:
     """Exact top-k by cosine similarity to ``query``. Deterministic
-    tie-break on id. Plan: scan → map (cosine) → TakeOrderedAndProject."""
-    from datafusion_spatial_spark.exprcache import cached_columns
-
-    def _build():
-        q = lit_double_array(query)
-        # precompute |q| driver-side: it is constant per query, and folding
-        # it into a literal removes one array fold per row
-        qn = math.sqrt(sum(float(x) * float(x) for x in query)) or 1.0
-        v = F.col("__v")
-        raw = F.col("__raw")
-        return (
-            _vec(vec_col).alias("__v"),
-            (dot(v, q) / (norm(v) * F.lit(qn))).alias("__raw"),
-            F.when(~F.isnan(raw), raw).alias("score"),
-        )
-
-    vec, raw, score = cached_columns(
-        ("cosine_topk", vec_col, tuple(float(x) for x in query)), _build
+    tie-break on id; NaN-bearing or zero-norm vectors score NULL (see
+    ``exprlit.cosine_sql``) and rank last. Plan: scan → map (cosine) →
+    TakeOrderedAndProject."""
+    # precompute |q| driver-side: it is constant per query, and folding
+    # it into a literal removes one array fold per row
+    qn = math.sqrt(sum(float(x) * float(x) for x in query)) or 1.0
+    return _score_topk(
+        df, id_col, vec_sql(vec_col),
+        cosine_raw_sql("__v", query, norm_b=render_double(qn)), k,
     )
-    return _score_topk(df, id_col, vec, raw, score, k)
 
 
-def _score_topk(
-    df: DataFrame, id_col: str, vec: Column, raw: Column, score: Column, k: int
-) -> DataFrame:
+def _score_topk(df: DataFrame, id_col: str, vec: str, raw: str, k: int) -> DataFrame:
     """Top-k by ``score`` with each stage in its own projection: the cast
-    vector (read by both the dot and the norm fold) and the raw cosine
-    (read by the NaN test and the result) are each computed once per row —
-    Catalyst shares no subexpression under a higher-order function."""
+    vector ``vec`` (read by both the dot and the norm fold, as ``__v`` in
+    ``raw``) and the raw cosine (read by the NaN test and the result) are
+    each computed once per row — Catalyst shares no subexpression under a
+    higher-order function."""
     return (
-        df.select(F.col(id_col), vec)
-        .select(F.col(id_col), raw)
-        .select(F.col(id_col), score)
+        df.select(F.col(id_col), F.expr(vec).alias("__v"))
+        .select(F.col(id_col), F.expr(raw).alias("__raw"))
+        .select(F.col(id_col), F.expr(not_nan_sql("__raw")).alias("score"))
         .orderBy(F.desc("score"), F.col(id_col))
         .limit(k)
     )
@@ -196,7 +150,7 @@ def knn_pairs_bruteforce(
     a = df.select(F.col(id_col).alias("id_a"), _vec(vec_col).alias("va"))
     b = df.select(F.col(id_col).alias("id_b"), _vec(vec_col).alias("vb"))
     pairs = a.join(b, F.col("id_a") != F.col("id_b")).withColumn(
-        "score", cosine(F.col("va"), F.col("vb"))
+        "score", F.expr(cosine_sql("va", "vb"))
     )
     w = Window.partitionBy("id_a").orderBy(F.desc("score"), F.col("id_b"))
     return (
@@ -226,18 +180,17 @@ def lsh_bucket(
 ) -> DataFrame:
     """Add a ``bucket`` column: integer whose bit i = sign(v · plane_i).
     Map-only; bucket is then a blocking/partitioning key."""
-    v = _vec(vec_col)
     if len(planes) > 62:
         raise ValueError("lsh_bucket supports at most 62 hyperplanes")
-    bucket = None
-    for i, plane in enumerate(planes):
-        p = lit_double_array(plane)
-        bit = F.when(dot(v, p) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
+    v = vec_sql(vec_col)
+    bits = " + ".join(
+        f"CASE WHEN {dot_sql(v, plane)} > 0 THEN {1 << i} ELSE 0 END"
+        for i, plane in enumerate(planes)
+    )
     # long, not int: with >= 32 planes bit 31 overflows a 32-bit cast to a
     # negative id that can never match the Python-side probe set, silently
     # truncating every lsh_topk result (r7 review fix)
-    return df.withColumn("bucket", bucket.cast("long"))
+    return df.withColumn("bucket", F.expr(f"CAST({bits} AS BIGINT)"))
 
 
 def lsh_topk(
@@ -269,12 +222,7 @@ def lsh_topk(
                 probes.add(qbucket ^ (1 << i) ^ (1 << j))
     bucketed = lsh_bucket(df, vec_col, id_col, planes)
     cand = bucketed.filter(F.col("bucket").isin(sorted(probes)))
-    q = lit_double_array(query)
-    return (
-        cand.select(F.col(id_col), cosine(_vec(vec_col), q).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    return _rank_by_cosine(cand, id_col, vec_sql(vec_col), query, k)
 
 
 def cosine_near_dup_pairs(
@@ -423,12 +371,12 @@ def _near_dup_pairs_banded(
     base = df.select(
         F.col(id_col).alias("__id"),
         _vec(vec_col).alias("__v"),
-        # per-ROW norm via the same sequential fold cosine() uses, so the
-        # per-PAIR verify below is bit-identical to cosine(a, b) while
-        # paying one interpreted fold per pair (the dot) instead of
+        # per-ROW norm via the same sequential fold cosine_sql uses, so
+        # the per-PAIR verify below is bit-identical to cosine_sql(a, b)
+        # while paying one interpreted fold per pair (the dot) instead of
         # three — higher-order functions never reach codegen, and the
         # two norm folds per candidate pair dominated the verify at 100x
-        norm(_vec(vec_col)).alias("__nrm"),
+        F.expr(norm_sql(vec_sql(vec_col))).alias("__nrm"),
         _bucket_arrays_np(plane_groups)(_vec(vec_col)).alias("__bkts"),
     )
     # materialize once: every band branch reads BOTH join sides from this
@@ -505,15 +453,13 @@ def _near_dup_pairs_banded(
         canon = _canonical(k)
         if canon is not None:
             pairs = pairs.filter(canon)
-        # bit-identical to cosine(__va, __vb): same dot fold, same
-        # norm(a) * norm(b) product (folded once per row upstream),
-        # same NaN guard and non-ANSI zero-norm NULL
-        raw = dot(F.col("__va"), F.col("__vb")) / (
-            F.col("__na") * F.col("__nb")
-        )
+        # bit-identical to cosine_sql(__va, __vb): same dot fold, same
+        # norm(a) * norm(b) product (folded once per row upstream), same
+        # NaN guard and zero-norm NULL
+        raw = cosine_raw_sql("__va", "__vb", norm_a="__na", norm_b="__nb")
         pairs = (
             pairs
-            .withColumn("score", F.when(~F.isnan(raw), raw))
+            .withColumn("score", F.expr(not_nan_sql(raw)))
             .filter(F.col("score") >= F.lit(float(threshold)))
             .select("id_a", "id_b", F.round("score", 6).alias("score"))
         )
@@ -551,7 +497,7 @@ def _near_dup_pairs_one_band(
     pairs = (
         a.join(b, "bucket")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("score", cosine(F.col("__va"), F.col("__vb")))
+        .withColumn("score", F.expr(cosine_sql("__va", "__vb")))
         .filter(F.col("score") >= F.lit(float(threshold)))
         .select("id_a", "id_b", F.round("score", 6).alias("score"))
     )
@@ -631,16 +577,6 @@ def ivf_index(
     return assigned, centroids
 
 
-def sqdist(a: Column, b: Column) -> Column:
-    """Sequential-order squared L2 distance (matches DuckDB list_reduce
-    order, so oracle mirrors are bit-exact)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def ivf_index_pivots(
     df: DataFrame,
     vec_col: str,
@@ -687,25 +623,15 @@ def ivf_index_pivots(
     else:
         _check_pivots(pivots, n_lists)
         pivots = [[float(x) for x in p] for p in pivots[:n_lists]]
-    finite = [finite_doubles(p) for p in pivots]
     # the cast vector is its own projection, computed once per row rather
     # than once per pivot distance
     v = "__ivf_v"
-    if pivots and all(f is not None for f in finite):
-        # r16: the argmin distance array as ONE F.expr string — the
-        # Column-API form built n_lists aggregate/zip_with lambda pairs
-        # (~1.5 s of py4j for 8×64-dim pivots); tree-identical rendering
-        scores = F.expr(
-            "array("
-            + ",".join(
-                sqdist_sql(quote_col(v), render_double_array(f)) for f in finite
-            )
-            + ")"
-        )
-    else:
-        scores = F.array(
-            *[sqdist(F.col(v), lit_double_array(p)) for p in pivots]
-        )
+    # the argmin distance array as ONE F.expr string: built node by node
+    # through the Column API, its n_lists aggregate/zip_with lambda pairs
+    # cost ~1.5 s of py4j for 8×64-dim pivots
+    scores = F.expr(
+        "array(" + ",".join(sqdist_sql(quote_col(v), p) for p in pivots) + ")"
+    )
     list_id = (F.array_position(scores, F.array_min(scores)) - 1).cast("int")
     return (
         df.withColumn(v, _vec(vec_col))
@@ -742,23 +668,36 @@ def ivf_topk(
     scan only the ``nprobe`` nearest lists, exact cosine rerank. The
     ``list_id`` filter is the IVF pruning step — with list-partitioned
     storage it becomes partition pruning instead of a filter."""
-    import math as _m
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = _m.sqrt(sum(x * x for x in a)) or 1.0
-        nb = _m.sqrt(sum(x * x for x in b)) or 1.0
-        return dot / (na * nb)
-
-    ranked = sorted(range(len(centroids)), key=lambda i: -cos(query, centroids[i]))
-    probes = ranked[: max(1, nprobe)]
-    q = lit_double_array(query)
-    v, raw = F.col("__v"), F.col("__raw")
+    probes = _probe_lists(centroids, query, nprobe)
     cand = assigned.filter(F.col("list_id").isin(probes))
     return _score_topk(
-        cand, id_col, _vec(vec_col).alias("__v"),
-        (dot(v, q) / (norm(v) * norm(q))).alias("__raw"),
-        F.when(~F.isnan(raw), raw).alias("score"), k,
+        cand, id_col, vec_sql(vec_col), cosine_raw_sql("__v", query), k
+    )
+
+
+def _probe_lists(centroids: list[list[float]], query: list[float], nprobe: int) -> list[int]:
+    """The ``nprobe`` list ids whose centroids are most cosine-similar to
+    ``query``, ranked driver-side (the centroid set is tiny)."""
+
+    def cos(a, b):
+        d = sum(x * y for x, y in zip(a, b))
+        na = math.sqrt(sum(x * x for x in a)) or 1.0
+        nb = math.sqrt(sum(x * x for x in b)) or 1.0
+        return d / (na * nb)
+
+    ranked = sorted(range(len(centroids)), key=lambda i: -cos(query, centroids[i]))
+    return ranked[: max(1, nprobe)]
+
+
+def _rank_by_cosine(
+    df: DataFrame, id_col: str, vec: str, query: list[float], k: int
+) -> DataFrame:
+    """Top-k of ``df`` by ``cosine_sql(vec, query)`` (``vec`` is SQL text),
+    ties broken by id."""
+    return (
+        df.select(F.col(id_col), F.expr(cosine_sql(vec, query)).alias("score"))
+        .orderBy(F.desc("score"), F.col(id_col))
+        .limit(k)
     )
 
 
@@ -917,39 +856,19 @@ def pq_topk(
         return cand
     if vec_col is None:
         raise ValueError("vec_col required when rerank frame is given")
-    vals = finite_doubles(query)
-    if vals is not None:
-        # r16: raw vector carried, cast-and-cosine rendered as one expr
-        # string (cosine(transform(__v, cast), q) — the same tree _vec +
-        # cosine built)
-        exact = cand.join(
-            rerank.select(F.col(id_col), F.col(vec_col).alias("__v")),
-            id_col,
-        ).select(
-            F.col(id_col),
-            F.expr(
-                cosine_sql(vec_sql("__v"), render_double_array(vals))
-            ).alias("score"),
-        )
-    else:
-        q = lit_double_array(query)
-        exact = (
-            cand.join(
-                rerank.select(F.col(id_col), _vec(vec_col).alias("__v")),
-                id_col,
-            )
-            .select(F.col(id_col), cosine(F.col("__v"), q).alias("score"))
-        )
-    return exact.orderBy(F.desc("score"), F.col(id_col)).limit(k)
+    # the raw vector is carried through the join and cast in the score,
+    # so only the shortlist's vectors are cast
+    exact = cand.join(
+        rerank.select(F.col(id_col), F.col(vec_col).alias("__v")), id_col
+    )
+    return _rank_by_cosine(exact, id_col, vec_sql("__v"), query, k)
 
 
 def _adc_score_expr(codebooks: list[list[list[float]]], query: list[float]) -> Column:
     """Approximate-cosine column over ``pq_code``: per-query LUT[j][c] =
     dot(normalized query subvector j, codeword c), folded as
     zip_with + aggregate — pure Catalyst."""
-    import math as _m
-
-    qn = _m.sqrt(sum(float(x) * float(x) for x in query)) or 1.0
+    qn = math.sqrt(sum(float(x) * float(x) for x in query)) or 1.0
     qv = [float(x) / qn for x in query]
     m = len(codebooks)
     sub = len(codebooks[0][0])
@@ -957,24 +876,12 @@ def _adc_score_expr(codebooks: list[list[list[float]]], query: list[float]) -> C
         [sum(qv[j * sub + t] * c[t] for t in range(sub)) for c in codebooks[j]]
         for j in range(m)
     ]
-    finite = [finite_doubles(row) for row in lut]
-    if lut and all(f is not None for f in finite):
-        # r16: LUT fold as one expr string (tree-identical)
-        lut_sql = (
-            "array("
-            + ",".join(render_double_array(f) for f in finite)
-            + ")"
-        )
-        return F.expr(
-            f"aggregate(zip_with({quote_col('pq_code')}, {lut_sql}, "
-            f"(__c, __r) -> element_at(__r, __c + 1)), "
-            f"0.0D, (__a, __x) -> __a + __x)"
-        )
-    lut_lit = lit_double_matrix(lut)
-    partials = F.zip_with(
-        F.col("pq_code"), lut_lit, lambda c, row: F.element_at(row, c + 1)
+    lut_sql = "array(" + ",".join(render_double_array(row) for row in lut) + ")"
+    return F.expr(
+        f"aggregate(zip_with({quote_col('pq_code')}, {lut_sql}, "
+        f"(__c, __r) -> element_at(__r, __c + 1)), "
+        f"0.0D, (__a, __x) -> __a + __x)"
     )
-    return F.aggregate(partials, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def ivfpq_topk(
@@ -996,31 +903,11 @@ def ivfpq_topk(
     by the pure-Catalyst ADC fold, no vector read). ``assigned`` must
     carry both ``list_id`` (ivf_index) and ``pq_code`` (pq_encode).
     Optional exact rerank as in :func:`pq_topk`."""
-    import math as _m
-
-    def cos(a, b):
-        d = sum(x * y for x, y in zip(a, b))
-        na = _m.sqrt(sum(x * x for x in a)) or 1.0
-        nb = _m.sqrt(sum(x * x for x in b)) or 1.0
-        return d / (na * nb)
-
-    ranked = sorted(range(len(centroids)), key=lambda i: -cos(query, centroids[i]))
-    probes = ranked[: max(1, nprobe)]
-    cand = assigned.filter(F.col("list_id").isin(probes))
-    scored = cand.select(
-        F.col(id_col), _adc_score_expr(codebooks, query).alias("approx_score")
+    probes = _probe_lists(centroids, query, nprobe)
+    return pq_topk(
+        assigned.filter(F.col("list_id").isin(probes)), codebooks, id_col,
+        query, k, rerank, vec_col, rerank_factor,
     )
-    n_cand = k * rerank_factor if rerank is not None else k
-    short = scored.orderBy(F.desc("approx_score"), F.col(id_col)).limit(n_cand)
-    if rerank is None:
-        return short
-    if vec_col is None:
-        raise ValueError("vec_col required when rerank frame is given")
-    q = lit_double_array(query)
-    exact = short.join(
-        rerank.select(F.col(id_col), _vec(vec_col).alias("__v")), id_col
-    ).select(F.col(id_col), cosine(F.col("__v"), q).alias("score"))
-    return exact.orderBy(F.desc("score"), F.col(id_col)).limit(k)
 
 
 # ---------------------------------------------------------------------------
@@ -1084,52 +971,31 @@ def sq8_encode(
     (transform + element_at on literal param arrays), map-only; null
     vectors encode to null. floor(+0.5) rather than round() so the
     half-way rule is the same expression in every engine."""
-    vm, vs = finite_doubles(mins), finite_doubles(spans)
-    if vm is not None and vs is not None:
-        # r16: one expr string (tree-identical to the lambda form below)
-        rm, rs = render_double_array(vm), render_double_array(vs)
-        code = F.expr(
-            f"transform({vec_sql(vec_col)}, (__x, __i) -> "
-            f"cast(least(255, greatest(0, floor("
-            f"(__x - element_at({rm}, __i + 1)) "
-            f"/ element_at({rs}, __i + 1) * 255.0D + 0.5D"
-            f"))) as int))"
-        )
-        return df.withColumn(out_col, code)
-    mnl = lit_double_array(mins)
-    spl = lit_double_array(spans)
-    code = F.transform(
-        _vec(vec_col),
-        lambda x, i: F.least(
-            F.lit(255),
-            F.greatest(
-                F.lit(0),
-                F.floor(
-                    (x - F.element_at(mnl, i + F.lit(1)))
-                    / F.element_at(spl, i + F.lit(1))
-                    * 255.0
-                    + 0.5
-                ),
-            ),
-        ).cast("int"),
+    rm, rs = render_double_array(mins), render_double_array(spans)
+    code = F.expr(
+        f"transform({vec_sql(vec_col)}, (__x, __i) -> "
+        f"cast(least(255, greatest(0, floor("
+        f"(__x - element_at({rm}, __i + 1)) "
+        f"/ element_at({rs}, __i + 1) * 255.0D + 0.5D"
+        f"))) as int))"
     )
     return df.withColumn(out_col, code)
 
 
-def sq8_decode_expr(
-    code_col: Column | str, mins: list[float], spans: list[float]
-) -> Column:
+def _sq8_decode_sql(code_col: str, mins: list[float], spans: list[float]) -> str:
+    return (
+        f"transform({quote_col(code_col)}, (__x, __i) -> "
+        f"element_at({render_double_array(mins)}, __i + 1) "
+        f"+ cast(__x as double) / 255.0D "
+        f"* element_at({render_double_array(spans)}, __i + 1))"
+    )
+
+
+def sq8_decode_expr(code_col: str, mins: list[float], spans: list[float]) -> Column:
     """Reconstruction ``x̂ = min + code/255·span`` as a Catalyst array
     expression — composes into any scoring expression without leaving
     the JVM."""
-    mnl = lit_double_array(mins)
-    spl = lit_double_array(spans)
-    c = F.col(code_col) if isinstance(code_col, str) else code_col
-    return F.transform(
-        c,
-        lambda x, i: F.element_at(mnl, i + F.lit(1))
-        + x.cast("double") / 255.0 * F.element_at(spl, i + F.lit(1)),
-    )
+    return F.expr(_sq8_decode_sql(code_col, mins, spans))
 
 
 def sq8_topk(
@@ -1146,24 +1012,8 @@ def sq8_topk(
     float vectors. Returns (id, score) like :func:`cosine_topk`; compose
     with an exact rerank against the float table when the last ulp of
     ranking matters."""
-    vq = finite_doubles(query)
-    vm, vs = finite_doubles(mins), finite_doubles(spans)
-    if vq is not None and vm is not None and vs is not None:
-        # r16: decode + cosine as one expr string (tree-identical)
-        dec_sql = (
-            f"transform({quote_col(code_col)}, (__x, __i) -> "
-            f"element_at({render_double_array(vm)}, __i + 1) "
-            f"+ cast(__x as double) / 255.0D "
-            f"* element_at({render_double_array(vs)}, __i + 1))"
-        )
-        score = F.expr(cosine_sql(dec_sql, render_double_array(vq)))
-    else:
-        q = lit_double_array(query)
-        score = cosine(sq8_decode_expr(code_col, mins, spans), q)
-    return (
-        encoded.select(F.col(id_col), score.alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
+    return _rank_by_cosine(
+        encoded, id_col, _sq8_decode_sql(code_col, mins, spans), query, k
     )
 
 
@@ -1216,27 +1066,13 @@ def ivf_topk_from_storage(
     exact cosine rerank. Same semantics as :func:`ivf_topk` on the
     in-memory assignment."""
     import json
-    import math as _m
     import os
 
     with open(os.path.join(path, _IVF_SIDECAR)) as f:
         centroids = json.load(f)["centroids"]
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = _m.sqrt(sum(x * x for x in a)) or 1.0
-        nb = _m.sqrt(sum(x * x for x in b)) or 1.0
-        return dot / (na * nb)
-
-    ranked = sorted(range(len(centroids)), key=lambda i: -cos(query, centroids[i]))
-    probes = ranked[: max(1, nprobe)]
-    q = lit_double_array(query)
+    probes = _probe_lists(centroids, query, nprobe)
     cand = spark.read.parquet(path).filter(F.col("list_id").isin(probes))
-    return (
-        cand.select(F.col(id_col), cosine(_vec(vec_col), q).alias("score"))
-        .orderBy(F.desc("score"), F.col(id_col))
-        .limit(k)
-    )
+    return _rank_by_cosine(cand, id_col, vec_sql(vec_col), query, k)
 
 
 def semantic_dedup(

@@ -6,7 +6,8 @@
 * tables.register_views: the skip re-validates against the live catalog
   (an outside dropTempView is repaired) and the _VIEWS dict stays
   maintained while the relation cache is disabled.
-* exprcache: bounded (FIFO cap) and keyed on the active SparkContext.
+* exprcache: bounded (FIFO cap) and keyed on the active SparkContext;
+  every insert purges the entries of dead contexts.
 * dedup.connected_components: the small-graph driver fast path is gated
   on id types whose Python ordering provably matches Spark's —
   float/double ids (NaN-capable) take the distributed loop.
@@ -87,6 +88,20 @@ def test_exprcache_hit_returns_same_object(spark):
     b = exprcache.cached_columns(("r16-hit",), lambda: F.lit(2))
     assert a is b  # second build never ran
     exprcache._CACHE.clear()
+
+
+def test_exprcache_purges_dead_context_on_insert(spark):
+    """One insert under the live context drops an entry tagged with any
+    other context, although the cache is far from full and the key is
+    new."""
+    exprcache._CACHE.clear()
+    exprcache._CACHE[("r16-stale",)] = (object(), F.lit(0))  # a dead context
+    try:
+        exprcache.cached_columns(("r16-live",), lambda: F.lit(1))
+        assert ("r16-stale",) not in exprcache._CACHE
+        assert ("r16-live",) in exprcache._CACHE
+    finally:
+        exprcache._CACHE.clear()
 
 
 # --- CC fast-path id-type gating ------------------------------------------

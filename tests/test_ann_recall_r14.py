@@ -23,20 +23,20 @@ quality, not just pruning self-consistency.
 from __future__ import annotations
 
 import math
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from datafusion_spatial_spark.operators.simsearch import (
-    _vec,
-    cosine,
     ivf_index_pivots,
     lsh_bucket,
     pq_encode,
     pq_topk,
     random_hyperplanes,
 )
+from vecref import ref_cosine, ref_topk
 
 SF01 = "/root/testdata/sf0.01"
 
@@ -64,18 +64,31 @@ def qvec(emb):
     ]
 
 
+def _round6(x):
+    """Spark's ``round(x, 6)`` on a double: HALF_UP on its decimal form."""
+    if x is None:
+        return None
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _top10(rows, q):
+    """Reference cosine top-10 ids of ``(vec_id, vector)`` rows, scored and
+    ranked like the gates: round(cosine, 6) desc, then vec_id."""
+    scored = [(i, _round6(ref_cosine(v, q))) for i, v in rows]
+    return [i for i, _ in ref_topk(scored, 10)]
+
+
 @pytest.fixture(scope="module")
-def exact10(emb, qvec):
-    q = F.array(*[F.lit(float(x)) for x in qvec])
+def vectors(emb):
     return [
-        r.vec_id
-        for r in emb.select(
-            "vec_id", F.round(cosine(_vec("embedding"), q), 6).alias("s")
-        )
-        .orderBy(F.desc("s"), "vec_id")
-        .limit(10)
-        .collect()
+        (r.vec_id, None if r.embedding is None else [float(x) for x in r.embedding])
+        for r in emb.select("vec_id", "embedding").collect()
     ]
+
+
+@pytest.fixture(scope="module")
+def exact10(vectors, qvec):
+    return _top10(vectors, qvec)
 
 
 def _recall(got_ids, exact_ids):
@@ -89,7 +102,7 @@ def _py_cos(a, b):
     return d / (na * nb)
 
 
-def test_ivf_recall_vs_nprobe_pinned(emb, qvec, exact10):
+def test_ivf_recall_vs_nprobe_pinned(emb, vectors, qvec, exact10):
     assigned, pivots = ivf_index_pivots(emb, "embedding", "vec_id", n_lists=8)
     assigned = assigned.cache()
     assigned.count()
@@ -97,22 +110,15 @@ def test_ivf_recall_vs_nprobe_pinned(emb, qvec, exact10):
         ranked = sorted(
             range(len(pivots)), key=lambda i: -_py_cos(qvec, pivots[i])
         )
-        q = F.array(*[F.lit(float(x)) for x in qvec])
         got = {}
         for nprobe in sorted(IVF_RECALL):
-            ids = [
+            listed = {
                 r.vec_id
                 for r in assigned.filter(
                     F.col("list_id").isin(ranked[:nprobe])
-                )
-                .select(
-                    "vec_id",
-                    F.round(cosine(_vec("embedding"), q), 6).alias("s"),
-                )
-                .orderBy(F.desc("s"), "vec_id")
-                .limit(10)
-                .collect()
-            ]
+                ).select("vec_id").collect()
+            }
+            ids = _top10([(i, v) for i, v in vectors if i in listed], qvec)
             got[nprobe] = _recall(ids, exact10)
         assert got == IVF_RECALL
         seq = [got[k] for k in sorted(got)]
@@ -122,7 +128,7 @@ def test_ivf_recall_vs_nprobe_pinned(emb, qvec, exact10):
         assigned.unpersist()
 
 
-def test_lsh_recall_vs_radius_pinned(emb, exact10):
+def test_lsh_recall_vs_radius_pinned(emb, vectors, exact10):
     planes = random_hyperplanes(E.EMB_DIMS, E.N_PLANES, seed=E.PLANES_SEED)
     bucketed = lsh_bucket(emb, "embedding", "vec_id", planes).cache()
     bucketed.count()
@@ -137,19 +143,10 @@ def test_lsh_recall_vs_radius_pinned(emb, exact10):
                 F.bit_count(
                     F.col("bucket").bitwiseXOR(F.col("qbucket"))
                 ) <= radius
-            )
-            ids = [
-                r.vec_id
-                for r in cand.select(
-                    "vec_id",
-                    F.round(
-                        cosine(_vec("embedding"), _vec("qe")), 6
-                    ).alias("s"),
-                )
-                .orderBy(F.desc("s"), "vec_id")
-                .limit(10)
-                .collect()
-            ]
+            ).select("vec_id", "qe").collect()
+            qe = [float(x) for x in cand[0].qe]
+            in_cand = {r.vec_id for r in cand}
+            ids = _top10([(i, v) for i, v in vectors if i in in_cand], qe)
             got[radius] = _recall(ids, exact10)
         assert {k: got[k] for k in LSH_RECALL} == LSH_RECALL
         seq = [got[k] for k in radii]

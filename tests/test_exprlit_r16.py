@@ -1,6 +1,7 @@
-"""r16 exprlit: the one-round-trip F.expr renderings must be value-exact
-twins of the Column-API builders they replace (same trees, same doubles —
-down to denormals), and the non-finite fallbacks must keep working."""
+"""exprlit: the SQL renderings are the one definition of the vector math,
+so they are pinned bit for bit against the pure-Python sequential-fold
+reference in ``vecref``. Non-finite literals render as SQL casts and
+round-trip like every other double."""
 
 import math
 import random
@@ -11,150 +12,227 @@ from pyspark.sql import functions as F
 
 from datafusion_spatial_spark import exprlit
 from datafusion_spatial_spark.operators import simsearch as S
+from vecref import (
+    bits as _bits,
+    ref_cosine,
+    ref_dot,
+    ref_norm,
+    ref_sqdist,
+    ref_topk,
+)
+
+SPECIAL = [
+    float("nan"),
+    float("inf"),
+    float("-inf"),
+    -0.0,
+    5e-324,
+    1.7976931348623157e308,
+]
+# a vector column whose name needs quote_col
+ODD = "my `vec` col"
+DIMS = 6
 
 
-def _bits(x):
-    return None if x is None else struct.pack("<d", x)
+# --- fixtures ---------------------------------------------------------------
+
+
+def _rows():
+    rnd = random.Random(13)
+    rows = [
+        (i, [rnd.uniform(-100, 100) for _ in range(DIMS)]) for i in range(40)
+    ]
+    # every special value in a vector of otherwise ordinary numbers, plus
+    # vectors made only of specials
+    for j, s in enumerate(SPECIAL):
+        rows.append((100 + j, [s] + [rnd.uniform(-1, 1) for _ in range(DIMS - 1)]))
+    rows.append((200, [5e-324] * DIMS))  # denormal: products underflow
+    rows.append((201, [1.7976931348623157e308] * DIMS))  # overflows to inf
+    rows.append((202, [-0.0] * DIMS))  # zero norm
+    rows.append((203, [0.0] * DIMS))  # zero norm
+    rows.append((204, None))  # null vector stays null
+    return rows
 
 
 @pytest.fixture(scope="module")
-def vecs(spark):
-    rnd = random.Random(13)
-    rows = [
-        (i, [rnd.uniform(-100, 100) for _ in range(16)]) for i in range(50)
-    ]
-    rows.append((50, None))  # null vector must stay null/absent everywhere
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+def rows():
+    return _rows()
+
+
+@pytest.fixture(scope="module")
+def vecs(spark, rows):
+    return spark.createDataFrame(
+        rows, f"vec_id long, `{ODD.replace('`', '``')}` array<double>"
+    )
+
+
+def _vec(rows, vec_id):
+    return dict(rows)[vec_id]
+
+
+# --- tests ----------------------------------------------------------------
 
 
 def test_lit_double_array_exact(spark):
-    vals = [1e-307, -4.9e-324, 0.0, -1.5, 12345678901234.567]
+    vals = [1e-307, -4.9e-324, 0.0, -1.5, 12345678901234.567] + SPECIAL
     got = (
         spark.range(1)
-        .select(exprlit.lit_double_array(vals).alias("v"))
+        .select(F.expr(exprlit.render_double_array(vals)).alias("v"))
         .collect()[0]
         .v
     )
     assert [_bits(a) for a in vals] == [_bits(b) for b in got]
 
 
-def test_lit_double_array_nonfinite_fallback(spark):
-    vals = [1.0, float("inf")]
-    got = (
-        spark.range(1)
-        .select(exprlit.lit_double_array(vals).alias("v"))
-        .collect()[0]
-        .v
-    )
-    assert got == vals
+def test_lit_double_array_nonfinite_bits(spark):
+    """NaN, ±inf and -0.0 (sign bit kept) render as SQL and fold to the
+    same literal array ``F.lit`` builds."""
+    vals = [float("nan"), float("inf"), float("-inf"), -0.0, 1.5]
+    sql = exprlit.render_double_array(vals)
+    assert "CAST('NaN' AS DOUBLE)" in sql
+    rendered = F.expr(sql)
+    per_lit = F.array(*[F.lit(v) for v in vals])
+    df = spark.range(1).select(rendered.alias("a"), per_lit.alias("b"))
+    got = df.collect()[0]
+    assert struct.pack("<d", got.a[3]) == struct.pack("<d", -0.0)
+    assert [_bits(x) for x in got.a] == [_bits(x) for x in got.b]
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "[NaN,Infinity,-Infinity,-0.0,1.5]" in plan, plan
 
 
-def test_cosine_lit_matches_column_twin(spark, vecs):
+def test_cosine_sql_matches_reference(spark, rows, vecs):
     rnd = random.Random(7)
-    q = [rnd.uniform(-1, 1) for _ in range(16)]
-    a = vecs.select(
-        "vec_id", S.cosine_lit("embedding", q).alias("s")
-    ).collect()
-    b = vecs.select(
-        "vec_id",
-        S.cosine(S._vec("embedding"), exprlit.lit_double_array(q)).alias("s"),
-    ).collect()
-    assert [(r.vec_id, _bits(r.s)) for r in a] == [
-        (r.vec_id, _bits(r.s)) for r in b
+    queries = [
+        [rnd.uniform(-1, 1) for _ in range(DIMS)],
+        [float("nan")] + [1.0] * (DIMS - 1),
+        [float("inf")] + [1.0] * (DIMS - 1),
+        [0.0] * DIMS,
     ]
-
-
-def test_sqdist_sql_matches_column_twin(spark, vecs):
-    rnd = random.Random(3)
-    p = [rnd.uniform(-1, 1) for _ in range(16)]
-    sql = F.expr(
-        exprlit.sqdist_sql(
-            exprlit.vec_sql("embedding"), exprlit.render_double_array(p)
-        )
-    )
-    a = vecs.select("vec_id", sql.alias("d")).collect()
-    b = vecs.select(
-        "vec_id",
-        S.sqdist(S._vec("embedding"), exprlit.lit_double_array(p)).alias("d"),
-    ).collect()
-    assert [(r.vec_id, _bits(r.d)) for r in a] == [
-        (r.vec_id, _bits(r.d)) for r in b
-    ]
-
-
-def test_sq8_roundtrip_sql_vs_column(spark, vecs):
-    """sq8_encode (SQL path) == the lambda tree, and sq8_topk scores are
-    bit-identical between the fused-SQL and Column paths."""
-    nn = vecs.filter(F.col("embedding").isNotNull())
-    mins, spans = S.sq8_train(nn, "embedding")
-    enc_sql = S.sq8_encode(vecs, "embedding", mins, spans)
-    # force the Column fallback by injecting a non-finite sentinel pair,
-    # then undo it (same mins/spans values but via the lambda tree)
-    mnl = exprlit.lit_double_array(mins)
-    spl = exprlit.lit_double_array(spans)
-    code_lambda = F.transform(
-        S._vec("embedding"),
-        lambda x, i: F.least(
-            F.lit(255),
-            F.greatest(
-                F.lit(0),
-                F.floor(
-                    (x - F.element_at(mnl, i + F.lit(1)))
-                    / F.element_at(spl, i + F.lit(1))
-                    * 255.0
-                    + 0.5
-                ),
-            ),
-        ).cast("int"),
-    )
-    a = enc_sql.select("vec_id", "sq8_code").collect()
-    b = vecs.withColumn("sq8_code", code_lambda).select(
-        "vec_id", "sq8_code"
-    ).collect()
-    assert [(r.vec_id, r.sq8_code) for r in a] == [
-        (r.vec_id, r.sq8_code) for r in b
-    ]
-    rnd = random.Random(5)
-    q = [rnd.uniform(-1, 1) for _ in range(16)]
-    t_sql = S.sq8_topk(
-        enc_sql.select("vec_id", "sq8_code"), mins, spans, "vec_id", q, k=5
-    ).collect()
-    dec = S.sq8_decode_expr("sq8_code", mins, spans)
-    t_col = (
-        enc_sql.select("vec_id", "sq8_code")
-        .select(
+    for q in queries:
+        got = vecs.select(
             "vec_id",
-            S.cosine(dec, exprlit.lit_double_array(q)).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.col("vec_id"))
-        .limit(5)
-        .collect()
+            F.expr(exprlit.cosine_sql(exprlit.vec_sql(ODD), q)).alias("s"),
+        ).collect()
+        want = {i: ref_cosine(v, q) for i, v in rows}
+        assert [(r.vec_id, _bits(r.s)) for r in got] == [
+            (r.vec_id, _bits(want[r.vec_id])) for r in got
+        ]
+    # column against column: every vector with every special-bearing row
+    q_rows = [i for i, _ in rows if i >= 100]
+    pairs = vecs.toDF("ia", "va").crossJoin(
+        vecs.filter(F.col("vec_id").isin(q_rows)).toDF("ib", "vb")
     )
-    assert [(r.vec_id, _bits(r.score)) for r in t_sql] == [
-        (r.vec_id, _bits(r.score)) for r in t_col
+    got = pairs.select(
+        "ia", "ib", F.expr(exprlit.cosine_sql("va", "vb")).alias("s")
+    ).collect()
+    assert len(got) == len(rows) * len(q_rows)
+    for r in got:
+        want = ref_cosine(_vec(rows, r.ia), _vec(rows, r.ib))
+        assert _bits(r.s) == _bits(want), (r.ia, r.ib, r.s, want)
+
+
+def test_cosine_sql_zero_norm_is_null_under_ansi(spark, vecs):
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    got = {
+        r.vec_id: r.s
+        for r in vecs.filter(F.col("vec_id").isin(202, 203)).select(
+            "vec_id",
+            F.expr(
+                exprlit.cosine_sql(exprlit.vec_sql(ODD), [1.0] * DIMS)
+            ).alias("s"),
+        ).collect()
+    }
+    assert got == {202: None, 203: None}
+
+
+def test_sqdist_sql_matches_reference(spark, rows, vecs):
+    rnd = random.Random(3)
+    p = [rnd.uniform(-1, 1) for _ in range(DIMS)]
+    for q in (p, [float("-inf")] + p[1:]):
+        got = vecs.select(
+            "vec_id",
+            F.expr(exprlit.sqdist_sql(exprlit.vec_sql(ODD), q)).alias("d"),
+        ).collect()
+        assert [(r.vec_id, _bits(r.d)) for r in got] == [
+            (r.vec_id, _bits(ref_sqdist(_vec(rows, r.vec_id), q))) for r in got
+        ]
+
+
+def test_dot_and_norm_sql_match_reference(spark, rows, vecs):
+    q = [0.5, -2.0, 3.25, 1e-300, -0.0, 7.0]
+    got = vecs.select(
+        "vec_id",
+        F.expr(exprlit.dot_sql(exprlit.vec_sql(ODD), q)).alias("d"),
+        F.expr(exprlit.norm_sql(exprlit.vec_sql(ODD))).alias("n"),
+    ).collect()
+    for r in got:
+        v = _vec(rows, r.vec_id)
+        assert _bits(r.d) == _bits(None if v is None else ref_dot(v, q))
+        assert _bits(r.n) == _bits(None if v is None else ref_norm(v))
+
+
+@pytest.fixture(scope="module")
+def finite(spark, rows):
+    """Finite, non-null rows for the quantizers (their params are trained
+    on the data)."""
+    fin = [(i, v) for i, v in rows if i < 100]
+    return fin, spark.createDataFrame(fin, "vec_id long, embedding array<double>")
+
+
+def test_sq8_roundtrip_matches_reference(spark, finite):
+    """sq8_encode codes, sq8_decode_expr reconstructions and sq8_topk
+    scores equal the reference arithmetic bit for bit."""
+    fin, df = finite
+    mins, spans = S.sq8_train(df, "embedding")
+    enc = S.sq8_encode(df, "embedding", mins, spans).select(
+        "vec_id", "sq8_code"
+    )
+
+    def ref_code(x, mn, sp):
+        return int(max(0, min(255, math.floor((x - mn) / sp * 255.0 + 0.5))))
+
+    def ref_decode(codes):
+        return [
+            mn + c / 255.0 * sp for c, mn, sp in zip(codes, mins, spans)
+        ]
+
+    want_codes = {
+        i: [ref_code(x, mn, sp) for x, mn, sp in zip(v, mins, spans)]
+        for i, v in fin
+    }
+    got = enc.select(
+        "vec_id",
+        "sq8_code",
+        S.sq8_decode_expr("sq8_code", mins, spans).alias("xh"),
+    ).collect()
+    assert {r.vec_id: r.sq8_code for r in got} == want_codes
+    for r in got:
+        assert [_bits(x) for x in r.xh] == [
+            _bits(x) for x in ref_decode(want_codes[r.vec_id])
+        ]
+    rnd = random.Random(5)
+    q = [rnd.uniform(-1, 1) for _ in range(DIMS)]
+    top = S.sq8_topk(enc, mins, spans, "vec_id", q, k=5).collect()
+    want = ref_topk(
+        [(i, ref_cosine(ref_decode(c), q)) for i, c in want_codes.items()], 5
+    )
+    assert [(r.vec_id, _bits(r.score)) for r in top] == [
+        (i, _bits(s)) for i, s in want
     ]
 
 
-def test_ivf_pivots_sql_vs_fallback(spark, vecs):
-    """ivf_index_pivots assignment identical between the SQL scores array
-    and the Column fallback (forced via a NaN-bearing pivot set that we
-    replace with clean values through the fallback branch check)."""
-    assigned_sql, piv = S.ivf_index_pivots(vecs, "embedding", "vec_id", 4)
-    # rebuild through the fallback path by passing pivots with the same
-    # values (finite) but monkeypatching finite_doubles to force fallback
-    import datafusion_spatial_spark.operators.simsearch as sim
+def test_ivf_pivots_match_reference(spark, finite):
+    """ivf_index_pivots assigns each row to the first pivot at minimal
+    sequential squared distance."""
+    fin, df = finite
+    assigned, piv = S.ivf_index_pivots(df, "embedding", "vec_id", 4)
+    assert piv == [v for _, v in sorted(fin)[:4]]
 
-    orig = sim.finite_doubles
-    sim.finite_doubles = lambda v: None
-    try:
-        assigned_col, piv2 = S.ivf_index_pivots(
-            vecs, "embedding", "vec_id", 4, pivots=piv
-        )
-    finally:
-        sim.finite_doubles = orig
-    assert piv == piv2
-    a = assigned_sql.select("vec_id", "list_id").collect()
-    b = assigned_col.select("vec_id", "list_id").collect()
-    assert [(r.vec_id, r.list_id) for r in a] == [
-        (r.vec_id, r.list_id) for r in b
-    ]
+    def ref_list(v):
+        d = [ref_sqdist(v, p) for p in piv]
+        return d.index(min(d))
+
+    got = assigned.select("vec_id", "list_id").collect()
+    assert {r.vec_id: r.list_id for r in got} == {
+        i: ref_list(v) for i, v in fin
+    }

@@ -1,24 +1,29 @@
 """simsearch scores each vector once per row: ``cosine_topk`` and
 ``ivf_topk`` compute the cast vector and the raw cosine in their own
 projections, and ``ivf_index_pivots`` casts the vector once for all pivot
-distances. Scores and list assignments stay bit-identical to the single
-expression they replace; caller-supplied IVF pivots are validated."""
+distances. Scores and list assignments are bit-identical to the
+pure-Python sequential-fold reference (``vecref``); caller-supplied IVF
+pivots are validated."""
 
 import math
 import random
-import struct
 
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_spatial_spark.exprlit import lit_double_array
 from datafusion_spatial_spark.operators import simsearch as S
+from vecref import (
+    bits as _bits,
+    ref_cosine,
+    ref_divide,
+    ref_dot,
+    ref_norm,
+    ref_not_nan,
+    ref_sqdist,
+    ref_topk,
+)
 
 DIMS = 8
-
-
-def _bits(x):
-    return None if x is None else struct.pack("<d", x)
 
 
 @pytest.fixture(scope="module")
@@ -33,14 +38,16 @@ def vecs(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
 
 
+def _vectors(df):
+    return [(r.vec_id, r.embedding) for r in df.select("vec_id", "embedding").collect()]
+
+
 def _want(df, query, k):
-    """The replaced single expression, ranked the same way."""
-    return (
-        df.select("vec_id", S.cosine(S._vec("embedding"), lit_double_array(query)).alias("score"))
-        .orderBy(F.desc("score"), F.col("vec_id"))
-        .limit(k)
-        .collect()
-    )
+    """The reference cosine, ranked the same way."""
+    return [
+        (i, _bits(s))
+        for i, s in ref_topk([(i, ref_cosine(v, query)) for i, v in _vectors(df)], k)
+    ]
 
 
 def _pairs(rows):
@@ -54,17 +61,14 @@ def test_cosine_topk_bit_identical(vecs):
     n = vecs.count()
     got = S.cosine_topk(vecs, "embedding", "vec_id", q, k=n).collect()
     # cosine_topk folds |q| into a literal, so compare against that form
-    want = (
-        vecs.select(
-            "vec_id",
-            (S.dot(S._vec("embedding"), lit_double_array(q))
-             / (S.norm(S._vec("embedding")) * F.lit(qn))).alias("raw"),
-        )
-        .select("vec_id", F.when(~F.isnan("raw"), F.col("raw")).alias("score"))
-        .orderBy(F.desc("score"), F.col("vec_id"))
-        .collect()
+    want = ref_topk(
+        [
+            (i, None if v is None else ref_not_nan(ref_divide(ref_dot(v, q), ref_norm(v) * qn)))
+            for i, v in _vectors(vecs)
+        ],
+        n,
     )
-    assert _pairs(got) == _pairs(want)
+    assert _pairs(got) == [(i, _bits(s)) for i, s in want]
     assert [r.score for r in got[-2:]] == [None] * 2  # null and NaN last
 
 
@@ -74,19 +78,23 @@ def test_ivf_topk_bit_identical(vecs):
     # every list probed: the rerank sees each row with a list id
     got = S.ivf_topk(assigned, pivots, "embedding", "vec_id", q, k=100, nprobe=4)
     listed = assigned.filter(F.col("list_id").isNotNull())
-    assert _pairs(got.collect()) == _pairs(_want(listed, q, 100))
+    assert _pairs(got.collect()) == _want(listed, q, 100)
 
 
 def test_ivf_index_pivots_assignment_unchanged(vecs):
     assigned, pivots = S.ivf_index_pivots(vecs, "embedding", "vec_id", n_lists=4)
-    v = S._vec("embedding")
-    scores = F.array(*[S.sqdist(v, lit_double_array(p)) for p in pivots])
-    want = vecs.select(
-        "vec_id",
-        (F.array_position(scores, F.array_min(scores)) - 1).cast("int").alias("list_id"),
-    )
+
+    def ref_list(v):
+        # first minimum; Spark orders NaN above every number
+        d = [ref_sqdist(v, p) for p in pivots]
+        if v is None:
+            return None
+        key = [(math.isnan(x), x) for x in d]
+        return key.index(min(key))
+
     assert assigned.columns == vecs.columns + ["list_id"]
-    assert sorted(assigned.select("vec_id", "list_id").collect()) == sorted(want.collect())
+    got = {r.vec_id: r.list_id for r in assigned.select("vec_id", "list_id").collect()}
+    assert got == {i: ref_list(v) for i, v in _vectors(vecs)}
 
 
 def test_ivf_index_pivots_casts_the_vector_once(vecs):
