@@ -2,7 +2,8 @@ import pytest
 
 from datafusion_spatial_spark.session import get_spark
 
-REFDATA = "/root/reference/data"
+from refdata import refdata_dir
+
 TESTDATA = "/root/testdata"
 
 
@@ -10,6 +11,12 @@ TESTDATA = "/root/testdata"
 def spark():
     s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="session")
+def refdata():
+    """Directory of the reference's 18 geometry fixture files."""
+    return refdata_dir()
 
 
 @pytest.fixture(scope="session")

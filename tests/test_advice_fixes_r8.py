@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from datafusion_spatial_spark.operators.asof import asof_join
 from datafusion_spatial_spark.operators.corpus import mixture_sample
 
+from refdata import refdata_dir
+
 
 def _ts(s: str) -> datetime.datetime:
     return datetime.datetime.fromisoformat(s)
@@ -121,7 +123,7 @@ class TestReviewFixesR8:
     def test_file_uri_keeps_metadata(self, spark):
         from datafusion_spatial_spark import read_geoparquet, resolve_meta
 
-        src = "/root/reference/data/data-point-encoding_wkb.parquet"
+        src = f"{refdata_dir()}/data-point-encoding_wkb.parquet"
         plain = read_geoparquet(spark, src)
         uri = read_geoparquet(spark, "file://" + src)
         m_plain = resolve_meta(plain, "geometry")
@@ -190,7 +192,7 @@ def test_null_native_point_is_null_not_empty(spark):
     )
 
     df = read_geoparquet(
-        spark, "/root/reference/data/data-point-encoding_native.parquet"
+        spark, f"{refdata_dir()}/data-point-encoding_native.parquet"
     )
     m = resolve_meta(df, "geometry")
     rows = df.select(

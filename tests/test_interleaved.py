@@ -21,7 +21,8 @@ from datafusion_spatial_spark.functions.predicates import st_area
 from datafusion_spatial_spark.functions.scalar import st_envelope, st_npoints
 from datafusion_spatial_spark.meta import NESTING_DEPTH
 
-REFDATA = "/root/reference/data"
+from refdata import refdata_dir
+
 TYPES = [
     "point", "linestring", "polygon",
     "multipoint", "multilinestring", "multipolygon",
@@ -47,7 +48,7 @@ def twin_dir(tmp_path_factory):
     ``geo`` footer metadata."""
     out = tmp_path_factory.mktemp("interleaved")
     for t in TYPES:
-        src = f"{REFDATA}/data-{t}-encoding_native.parquet"
+        src = f"{refdata_dir()}/data-{t}-encoding_native.parquet"
         tbl = pq.read_table(src)
         depth = NESTING_DEPTH[_TYPE_NAME[t]]
         # plain list rather than fixed_size_list: parquet cannot encode
@@ -66,9 +67,9 @@ def twin_dir(tmp_path_factory):
 
 
 def _frames(spark, twin_dir, t):
-    sep = read_geoparquet(spark, f"{REFDATA}/data-{t}-encoding_native.parquet")
+    sep = read_geoparquet(spark, f"{refdata_dir()}/data-{t}-encoding_native.parquet")
     il = read_geoparquet(spark, str(twin_dir / f"data-{t}-interleaved.parquet"))
-    wk = read_geoparquet(spark, f"{REFDATA}/data-{t}-encoding_wkb.parquet")
+    wk = read_geoparquet(spark, f"{refdata_dir()}/data-{t}-encoding_wkb.parquet")
     return (
         (sep, resolve_meta(sep, "geometry")),
         (il, resolve_meta(il, "geometry")),

@@ -909,16 +909,14 @@ def test_locate_between_along_consistency():
             assert G._point_intersects((p[0], p[1]), flat), (p, lb.coords)
 
 
-def test_triangulate_reference_fixtures():
+def test_triangulate_reference_fixtures(refdata):
     """Triangulate the reference repo's polygon fixtures (read-only golden
     data): triangle areas must sum to st_area and centroids stay inside."""
     import glob
 
     import pyarrow.parquet as pq
 
-    files = sorted(glob.glob("/root/reference/data/data-polygon-*.parquet"))
-    if not files:
-        pytest.skip("reference fixtures unavailable")
+    files = sorted(glob.glob(f"{refdata}/data-polygon-*.parquet"))
     checked = 0
     for path in files:
         tbl = pq.read_table(path)

@@ -20,8 +20,9 @@ from datafusion_spatial_spark.functions.scalar import st_geomfromtext
 from datafusion_spatial_spark.meta import GeometryMeta
 from datafusion_spatial_spark.operators.spatial_join import spatial_join
 
+from refdata import refdata_dir
+
 WKB_META = GeometryMeta(encoding="WKB")
-REFDATA = "/root/reference/data"
 
 
 @pytest.fixture(scope="module")
@@ -72,7 +73,7 @@ def test_st_contains_dwithin(pairs):
 
 
 def test_measures_on_fixture(spark):
-    df = read_geoparquet(spark, f"{REFDATA}/data-polygon-encoding_native.parquet")
+    df = read_geoparquet(spark, f"{refdata_dir()}/data-polygon-encoding_native.parquet")
     meta = resolve_meta(df, "geometry")
     rows = (
         df.select(

@@ -7,6 +7,8 @@ from datafusion_spatial_spark.functions import st_astext
 from datafusion_spatial_spark.operators import skew
 from datafusion_spatial_spark.sources.geoparquet import write_geoparquet
 
+from refdata import refdata_dir
+
 
 def test_salted_count_sum_equivalence(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -37,7 +39,7 @@ def test_salted_join_equivalence(spark, sf_dir):
 
 def test_write_geoparquet_roundtrip(spark, tmp_path):
     src = read_geoparquet(
-        spark, "/root/reference/data/data-multipolygon-encoding_native.parquet"
+        spark, f"{refdata_dir()}/data-multipolygon-encoding_native.parquet"
     )
     meta = resolve_meta(src, "geometry")
     out = str(tmp_path / "mp_out")

@@ -1,8 +1,8 @@
-"""Golden e2e tests on the reference's shipped fixtures
-(/root/reference/data, read-only): 6 geometry types × {native, WKB} parquet
-+ WKT csv. Strategy per SURVEY §5: exact WKT goldens (oracle formatting),
-cross-encoding invariance, null/EMPTY/NaN edge rows, ST_Extent hand-computed
-values (FIXTURES.md)."""
+"""Golden e2e tests on the reference's fixtures (the shipped files when
+present, else built by ``refdata`` from FIXTURES.md §1, read-only): 6
+geometry types × {native, WKB} parquet + WKT csv. Strategy per SURVEY §5:
+exact WKT goldens (oracle formatting), cross-encoding invariance,
+null/EMPTY/NaN edge rows, ST_Extent hand-computed values (FIXTURES.md)."""
 
 import csv
 import math
@@ -24,7 +24,8 @@ from datafusion_spatial_spark.functions import (
 from datafusion_spatial_spark.functions.scalar import envelope_astext
 from datafusion_spatial_spark import wkb as wkbmod
 
-REFDATA = "/root/reference/data"
+from refdata import refdata_dir
+
 TYPES = ["point", "linestring", "polygon", "multipoint", "multilinestring", "multipolygon"]
 
 # reference ST_Extent goldens (FIXTURES.md; computable by hand from the CSVs)
@@ -42,7 +43,7 @@ def csv_wkts(typ: str) -> list[str | None]:
     """Expected WKT per row, from the reference's WKT csv (empty cell = null),
     normalized to oracle float formatting via our parser."""
     out = []
-    with open(f"{REFDATA}/data-{typ}-wkt.csv") as f:
+    with open(f"{refdata_dir()}/data-{typ}-wkt.csv") as f:
         for row in csv.DictReader(f):
             t = row["geometry"]
             out.append(wkbmod.to_wkt(wkbmod.from_wkt(t)) if t else None)
@@ -55,7 +56,9 @@ def encoding(request):
 
 
 def load(spark, typ, encoding):
-    df = read_geoparquet(spark, f"{REFDATA}/data-{typ}-encoding_{encoding}.parquet")
+    df = read_geoparquet(
+        spark, f"{refdata_dir()}/data-{typ}-encoding_{encoding}.parquet"
+    )
     meta = resolve_meta(df, "geometry")
     if encoding == "wkb":
         assert meta.is_wkb
@@ -191,7 +194,7 @@ def test_point_empty_nan_handling(spark):
 def test_meta_survives_transformations(spark):
     """SURVEY §7 risk: StructField.metadata must survive common DataFrame
     transformations so resolve_meta keeps working downstream."""
-    df = read_geoparquet(spark, f"{REFDATA}/data-point-encoding_native.parquet")
+    df = read_geoparquet(spark, f"{refdata_dir()}/data-point-encoding_native.parquet")
     m0 = resolve_meta(df, "geometry")
     # select / filter / limit keep field metadata
     sel = df.select("col", "geometry").filter(F.col("col") >= 0).limit(10)

@@ -24,7 +24,8 @@ from datafusion_spatial_spark.plans.sql import (
     SpatialSQL,
 )
 
-REFDATA = "/root/reference/data"
+from refdata import refdata_dir
+
 
 # one numeric literal per extra-arg slot (buffer radius / tolerance)
 _EXTRA_LIT = {"ST_BUFFER": "2.5", "ST_SIMPLIFY": "0.5",
@@ -42,10 +43,10 @@ def _call(name: str, inner: str) -> str:
 def ssql(spark):
     s = SpatialSQL(spark)
     s.register_geoparquet(
-        "polys", f"{REFDATA}/data-polygon-encoding_wkb.parquet"
+        "polys", f"{refdata_dir()}/data-polygon-encoding_wkb.parquet"
     )
     s.register_geoparquet(
-        "lines", f"{REFDATA}/data-linestring-encoding_wkb.parquet"
+        "lines", f"{refdata_dir()}/data-linestring-encoding_wkb.parquet"
     )
     return s
 

@@ -21,7 +21,8 @@ import pytest
 
 from datafusion_spatial_spark.plans.sql import SpatialSQL
 
-REFDATA = "/root/reference/data"
+from refdata import refdata_dir
+
 
 # (value-returning 1-geom scalar, SQL literal it compares against) —
 # chosen to span return types: double, int, bool, string
@@ -45,7 +46,7 @@ _SCALARS = [
 def ssql(spark):
     s = SpatialSQL(spark)
     s.register_geoparquet(
-        "fz", f"{REFDATA}/data-polygon-encoding_wkb.parquet"
+        "fz", f"{refdata_dir()}/data-polygon-encoding_wkb.parquet"
     )
     return s
 

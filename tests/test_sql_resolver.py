@@ -6,7 +6,7 @@ import pytest
 
 from datafusion_spatial_spark.plans.sql import SpatialSQL
 
-REFDATA = "/root/reference/data"
+from refdata import refdata_dir
 
 
 @pytest.fixture(scope="module")
@@ -15,7 +15,7 @@ def ssql(spark):
     for typ in ["point", "polygon"]:
         for enc in ["native", "wkb"]:
             s.register_geoparquet(
-                f"{typ}_{enc}", f"{REFDATA}/data-{typ}-encoding_{enc}.parquet"
+                f"{typ}_{enc}", f"{refdata_dir()}/data-{typ}-encoding_{enc}.parquet"
             )
     return s
 
@@ -294,10 +294,10 @@ def test_round6_sql_surface_sweep(ssql, spark):
 
     s = SpatialSQL(spark)
     s.register_geoparquet(
-        "r6poly", "/root/reference/data/data-polygon-encoding_native.parquet"
+        "r6poly", f"{refdata_dir()}/data-polygon-encoding_native.parquet"
     )
     s.register_geoparquet(
-        "r6ls", "/root/reference/data/data-linestring-encoding_wkb.parquet"
+        "r6ls", f"{refdata_dir()}/data-linestring-encoding_wkb.parquet"
     )
 
     def one(q):
@@ -374,10 +374,10 @@ def test_transform_functions_sql_same_meta(ssql, spark):
 
     s = SpatialSQL(spark)
     s.register_geoparquet(
-        "trn", "/root/reference/data/data-polygon-encoding_native.parquet"
+        "trn", f"{refdata_dir()}/data-polygon-encoding_native.parquet"
     )
     s.register_geoparquet(
-        "trw", "/root/reference/data/data-polygon-encoding_wkb.parquet"
+        "trw", f"{refdata_dir()}/data-polygon-encoding_wkb.parquet"
     )
 
     def one(q):
@@ -413,7 +413,7 @@ def test_largest_empty_circle_boundary_sql(ssql, spark):
 
     s = SpatialSQL(spark)
     s.register_geoparquet(
-        "lecmp", "/root/reference/data/data-multipoint-encoding_native.parquet"
+        "lecmp", f"{refdata_dir()}/data-multipoint-encoding_native.parquet"
     )
     bnd = "POLYGON ((0 0, 50 0, 50 50, 0 50, 0 0))"
     rows = s.sql(

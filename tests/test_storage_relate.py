@@ -6,6 +6,8 @@ from pyspark.sql import functions as F
 from datafusion_spatial_spark import geom_ops as G
 from datafusion_spatial_spark.wkb import from_wkt as g
 
+from refdata import refdata_dir
+
 
 SQ = g("POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))")
 
@@ -43,7 +45,7 @@ def test_sql_resolver_relate(spark):
 
     ssql = SpatialSQL(spark)
     ssql.register_geoparquet(
-        "polyt", "/root/reference/data/data-polygon-encoding_native.parquet"
+        "polyt", f"{refdata_dir()}/data-polygon-encoding_native.parquet"
     )
     rows = ssql.sql(
         "SELECT col, ST_Touches(geometry, geometry) AS t, "

@@ -15,6 +15,8 @@ from datafusion_spatial_spark.functions.transforms import (
 )
 from datafusion_spatial_spark.meta import GeometryMeta
 
+from refdata import refdata_dir
+
 LINE_META = GeometryMeta(encoding="linestring", geometry_types=("LineString",))
 POLY_META = GeometryMeta(encoding="polygon", geometry_types=("Polygon",))
 MPOINT_META = GeometryMeta(encoding="multipoint", geometry_types=("MultiPoint",))
@@ -50,7 +52,7 @@ def test_makeline_collect_and_translate(spark):
 
 def test_translate_scale_flip_snap(spark):
     df = read_geoparquet(
-        spark, "/root/reference/data/data-linestring-encoding_native.parquet"
+        spark, f"{refdata_dir()}/data-linestring-encoding_native.parquet"
     )
     meta = resolve_meta(df, "geometry")
     row = (

@@ -20,6 +20,8 @@ import pytest
 
 from datafusion_spatial_spark import wkb as W
 
+from refdata import refdata_dir
+
 
 @pytest.fixture(scope="module")
 def valid_buf():
@@ -118,7 +120,7 @@ def test_sql_resolver_nesting_bomb_rejected(spark):
 
     s = SpatialSQL(spark)
     s.register_geoparquet(
-        "adv_polys", "/root/reference/data/data-polygon-encoding_wkb.parquet"
+        "adv_polys", f"{refdata_dir()}/data-polygon-encoding_wkb.parquet"
     )
     bomb = "ST_Envelope(" * 1200 + "geometry" + ")" * 1200
     with pytest.raises(ValueError, match="nests 1200 levels"):
@@ -139,7 +141,7 @@ def test_sql_nesting_guard_ignores_string_literal_parens(spark):
     s = SpatialSQL(spark)
     s.register_geoparquet(
         "adv_polys2",
-        "/root/reference/data/data-polygon-encoding_wkb.parquet",
+        f"{refdata_dir()}/data-polygon-encoding_wkb.parquet",
     )
     rings = ", ".join(
         f"(({i} 0, {i} 1, {i}.5 1, {i} 0))" for i in range(40)

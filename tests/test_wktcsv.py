@@ -7,16 +7,17 @@ from datafusion_spatial_spark import read_geoparquet, resolve_meta
 from datafusion_spatial_spark.functions import st_astext, st_extent
 from datafusion_spatial_spark.sources.wktcsv import read_wkt_csv
 
-REFDATA = "/root/reference/data"
+from refdata import refdata_dir
+
 TYPES = ["point", "linestring", "polygon", "multipoint", "multilinestring", "multipolygon"]
 
 
 @pytest.mark.parametrize("typ", TYPES)
 def test_csv_matches_parquet(spark, typ):
-    csv = read_wkt_csv(spark, f"{REFDATA}/data-{typ}-wkt.csv")
+    csv = read_wkt_csv(spark, f"{refdata_dir()}/data-{typ}-wkt.csv")
     meta_csv = resolve_meta(csv, "geometry")
     assert meta_csv.is_wkb
-    pq = read_geoparquet(spark, f"{REFDATA}/data-{typ}-encoding_wkb.parquet")
+    pq = read_geoparquet(spark, f"{refdata_dir()}/data-{typ}-encoding_wkb.parquet")
     meta_pq = resolve_meta(pq, "geometry")
     a = [
         r.w
