@@ -38,7 +38,6 @@ from datafusion_spatial_spark.operators.hashing import (
     poly_hash_str_duckdb,
 )
 from datafusion_spatial_spark.operators.text import STOPWORDS
-from datafusion_spatial_spark.exprcache import cached_columns as _cached_cols
 from datafusion_spatial_spark.sources.tables import load_table, register_views
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -547,22 +546,13 @@ def _q_st_extent_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = load_table(spark, sf_dir, "customer")
     meta = GeometryMeta(encoding="point", geometry_types=("Point",))
-    pt_col, ext_col, out_cols = _cached_cols(
-        ("q_st_extent_customers",),
-        lambda: (
-            st_point(
-                F.col("c_acctbal"), F.col("c_custkey").cast("double")
-            ).alias("geom"),
-            st_extent("geom", meta).alias("e"),
-            (
-                F.col("e.xmin").alias("xmin"),
-                F.col("e.ymin").alias("ymin"),
-                F.col("e.xmax").alias("xmax"),
-                F.col("e.ymax").alias("ymax"),
-            ),
-        ),
+    return (
+        cust.select(
+            st_point(F.col("c_acctbal"), F.col("c_custkey").cast("double")).alias("geom")
+        )
+        .agg(st_extent("geom", meta).alias("e"))
+        .select("e.xmin", "e.ymin", "e.xmax", "e.ymax")
     )
-    return cust.select(pt_col).agg(ext_col).select(*out_cols)
 
 
 _Q_ST_EXTENT_ORACLE = """
@@ -625,29 +615,23 @@ def _q_st_envelope_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     meta = GeometryMeta(encoding="point", geometry_types=("Point",))
 
-    def _build():
-        ckey = F.col("c_custkey").cast("double")
-        inside = (
-            (F.col("c_acctbal") >= 0) & (F.col("c_acctbal") <= 5000)
-            & (ckey >= 0) & (ckey <= 7500)
-        )
-        return (
-            (
-                F.col("c_nationkey").alias("nationkey"),
-                st_point(F.col("c_acctbal"), ckey).alias("geom"),
-                F.when(inside, F.lit(1)).otherwise(F.lit(0)).alias("inside"),
-            ),
-            (
-                st_extent("geom", meta).alias("e"),
-                F.sum("inside").cast("bigint").alias("n_inside"),
-            ),
-            st_astext_bbox(F.col("e")).alias("envelope_wkt"),
-        )
-
-    pt_cols, agg_cols, wkt_col = _cached_cols(("q_st_envelope_by_nation",), _build)
-    pts = cust.select(*pt_cols)
-    ext = pts.groupBy("nationkey").agg(*agg_cols)
-    return ext.select("nationkey", wkt_col, "n_inside").orderBy("nationkey")
+    ckey = F.col("c_custkey").cast("double")
+    inside = (
+        (F.col("c_acctbal") >= 0) & (F.col("c_acctbal") <= 5000)
+        & (ckey >= 0) & (ckey <= 7500)
+    )
+    pts = cust.select(
+        F.col("c_nationkey").alias("nationkey"),
+        st_point(F.col("c_acctbal"), ckey).alias("geom"),
+        F.when(inside, F.lit(1)).otherwise(F.lit(0)).alias("inside"),
+    )
+    ext = pts.groupBy("nationkey").agg(
+        st_extent("geom", meta).alias("e"),
+        F.sum("inside").cast("bigint").alias("n_inside"),
+    )
+    return ext.select(
+        "nationkey", st_astext_bbox(F.col("e")).alias("envelope_wkt"), "n_inside"
+    ).orderBy("nationkey")
 
 
 _Q_ST_ENVELOPE_ORACLE = f"""
@@ -1026,35 +1010,22 @@ def _dwithin_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_spatial_spark.operators.spatial_join import spatial_join
 
     point_meta = GeometryMeta(encoding="point", geometry_types=("Point",))
-    cust_cols, sup_cols, out_cols = _cached_cols(
-        ("dwithin_pairs_cols",),
-        lambda: (
-            (
-                F.col("c_custkey"),
-                st_point(
-                    F.col("c_acctbal"), F.col("c_custkey").cast("double")
-                ).alias("geom"),
-            ),
-            (
-                F.col("s_suppkey"),
-                st_point(
-                    F.col("s_acctbal"), F.col("s_suppkey").cast("double")
-                ).alias("geom"),
-            ),
-            (
-                F.col("c_custkey").alias("custkey"),
-                F.col("s_suppkey").alias("suppkey"),
-            ),
-        ),
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey"),
+        st_point(F.col("c_acctbal"), F.col("c_custkey").cast("double")).alias("geom"),
     )
-    cust = load_table(spark, sf_dir, "customer").select(*cust_cols)
-    sup = load_table(spark, sf_dir, "supplier").select(*sup_cols)
+    sup = load_table(spark, sf_dir, "supplier").select(
+        F.col("s_suppkey"),
+        st_point(F.col("s_acctbal"), F.col("s_suppkey").cast("double")).alias("geom"),
+    )
     pairs = spatial_join(
         cust, sup, "geom", "geom", point_meta, point_meta,
         "c_custkey", "s_suppkey", cell_size=200.0, predicate="dwithin",
         distance=100.0,
     )
-    return pairs.select(*out_cols).orderBy("custkey", "suppkey")
+    return pairs.select(
+        F.col("c_custkey").alias("custkey"), F.col("s_suppkey").alias("suppkey")
+    ).orderBy("custkey", "suppkey")
 
 
 GEO_METERS = 150000.0  # geography-leg dwithin radius (150 km)
@@ -1501,32 +1472,27 @@ def _q_st_intersection_area(spark: SparkSession, sf_dir: str) -> DataFrame:
         st_geomfromtext("wkt_a").alias("a"),
         st_geomfromtext("wkt_b").alias("b"),
     )
-    def _build_cols():
-        # line and mixed-dimension pairs have meaningful lengths
-        has_len = F.col("pair_id") >= 100
+    # line and mixed-dimension pairs have meaningful lengths
+    has_len = F.col("pair_id") >= 100
 
-        def _len(col: F.Column) -> F.Column:
-            return F.when(has_len, F.round(st_length(col, w), 6)).cast("double")
+    def _len(col: F.Column) -> F.Column:
+        return F.when(has_len, F.round(st_length(col, w), 6)).cast("double")
 
-        inter = st_intersection("a", "b", w, w)
-        uni = st_union("a", "b", w, w)
-        diff = st_difference("a", "b", w, w)
-        sym = st_symdifference("a", "b", w, w)
-        return (
-            F.round(st_area(inter, w), 6).alias("inter_area"),
-            F.round(st_area(uni, w), 6).alias("union_area"),
-            F.round(st_area(diff, w), 6).alias("diff_area"),
-            F.round(st_area(sym, w), 6).alias("sym_area"),
-            _len(inter).alias("inter_len"),
-            _len(uni).alias("union_len"),
-            _len(diff).alias("diff_len"),
-            _len(sym).alias("sym_len"),
-        )
-
-    # memoized: fresh pandas-UDF objects per build force re-pickling and
-    # re-shipping the overlay kernels every run (exprcache)
-    cols = _cached_cols(("q_st_intersection_area",), _build_cols)
-    return df.select("pair_id", *cols).orderBy("pair_id")
+    inter = st_intersection("a", "b", w, w)
+    uni = st_union("a", "b", w, w)
+    diff = st_difference("a", "b", w, w)
+    sym = st_symdifference("a", "b", w, w)
+    return df.select(
+        "pair_id",
+        F.round(st_area(inter, w), 6).alias("inter_area"),
+        F.round(st_area(uni, w), 6).alias("union_area"),
+        F.round(st_area(diff, w), 6).alias("diff_area"),
+        F.round(st_area(sym, w), 6).alias("sym_area"),
+        _len(inter).alias("inter_len"),
+        _len(uni).alias("union_len"),
+        _len(diff).alias("diff_len"),
+        _len(sym).alias("sym_len"),
+    ).orderBy("pair_id")
 
 
 def _q_st_intersection_area_oracle() -> str:
@@ -2752,10 +2718,7 @@ def _q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             *repetition_cols(t, ngram_ks=(2, 3)),
         )
 
-    out = text_stats(
-        docs, "text", "doc_id",
-        extra_cols=_extras, extra_key=("q_text_stats", "pii4", (2, 3)),
-    )
+    out = text_stats(docs, "text", "doc_id", extra_cols=_extras)
     return out.select(
         "doc_id",
         F.col("n_chars_computed").cast("long").alias("n_chars_computed"),
@@ -3244,18 +3207,9 @@ def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_spatial_spark.exprlit import cosine_sql, vec_sql
 
     emb = load_table(spark, sf_dir, "embeddings")
-    qfilter, qe, score = _cached_cols(
-        ("q_cosine_topk",),
-        lambda: (
-            F.col("vec_id") == 0,
-            F.col("embedding").alias("qe"),
-            F.round(
-                F.expr(cosine_sql(vec_sql("embedding"), vec_sql("qe"))), 6
-            ).alias("score"),
-        ),
-    )
-    q = emb.filter(qfilter).select(qe)
-    scored = emb.crossJoin(F.broadcast(q)).select("vec_id", score)
+    q = emb.filter("vec_id = 0").selectExpr("embedding AS qe")
+    score = f"round({cosine_sql(vec_sql('embedding'), vec_sql('qe'))}, 6) AS score"
+    scored = emb.crossJoin(F.broadcast(q)).selectExpr("vec_id", score)
     return scored.orderBy(F.desc("score"), F.col("vec_id")).limit(10)
 
 

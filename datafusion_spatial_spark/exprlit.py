@@ -35,8 +35,23 @@ def render_double_array(values) -> str:
     return "array(" + ",".join(render_double(v) for v in values) + ")"
 
 
+def render_str(v: str) -> str:
+    """SQL text of one string literal. Spark unescapes backslash sequences
+    in string literals, so backslash and quote are both escaped; a regex
+    such as ``\\s+`` reaches the function unchanged."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def quote_col(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
+
+
+def col_sql(name: str) -> str:
+    """SQL text of ``F.col(name)``: dots separate the name parts (table
+    alias, column, struct field) and backticks quote, as F.col parses it."""
+    if "`" in name:
+        return name
+    return ".".join(quote_col(p) for p in name.split("."))
 
 
 # --- The vector-math builders -------------------------------------------

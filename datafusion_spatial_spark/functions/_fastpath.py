@@ -12,16 +12,8 @@ negligible against a full parse).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
-
-# Ops escape hatch (and A/B lever): set SPARK_GRAFT_NO_FASTPATH=1 in the
-# driver environment before session start (local-mode Python workers
-# inherit it) to force every batch through the generic per-row kernels.
-_DISABLED = os.environ.get("SPARK_GRAFT_NO_FASTPATH", "") not in ("", "0")
-
 
 # accepted little-endian point type words by record length: 2-D (21 B),
 # Z or M (29 B: ISO 1001/2001, EWKB 0x80000001/0x40000001), ZM (37 B:
@@ -1047,8 +1039,6 @@ def predicate_fastpath(sa, sb, mode: str, kind_a: str, kind_b: str):
       * point vs WKB polygonal (either orientation for the symmetric
         predicates; the correctly-oriented side for contains/within) —
         duplicate-heavy polygon batches only (_factorized_geoms)."""
-    if _DISABLED:
-        return None
 
     def side(s, kind):
         if kind == "point":
@@ -1173,8 +1163,6 @@ def distance_fastpath(sa, sb, kind_a: str, kind_b: str):
     mixed) and point vs duplicate-heavy WKB line/polygon batches. Returns
     a float64 Series (NaN -> SQL NULL via Arrow) or None to fall back.
     Expression order mirrors geom_ops.distance / point_seg_dist2."""
-    if _DISABLED:
-        return None
 
     def side(s, kind):
         if kind == "point":
@@ -2187,8 +2175,6 @@ def measure_fastpath(s, mode: str, src_kind: str = "wkb"):
     (0.0 for non-areal input); area folds signed abs(ring_area2)/2 per
     ring in ring order (0.0 for linear input), where ring_area2 itself
     folds the shoelace terms sequentially."""
-    if _DISABLED:
-        return None
     lb = _batch_decode(s, src_kind)
     if lb is None:
         return None
@@ -2283,8 +2269,6 @@ def centroid_fastpath(s, src_kind: str = "wkb"):
     None to fall back. Every fold is sequential-order (see
     _seq_fold_groups); degenerate rings the kernel skips contribute exact
     +0.0 terms instead."""
-    if _DISABLED:
-        return None
     lb = _batch_decode(s, src_kind)
     if lb is None:
         return None

@@ -33,16 +33,6 @@ def st_extent(col: Column | str, meta: GeometryMeta) -> Column:
     coords are already excluded by ``st_bbox`` (the reference's
     ``empty_point_check``, extent.rs:159-164); nulls are ignored by min/max.
     """
-    if isinstance(col, str):
-        from datafusion_spatial_spark.exprcache import cached_columns
-
-        return cached_columns(
-            ("st_extent", col, meta), lambda: _st_extent_build(col, meta)
-        )
-    return _st_extent_build(col, meta)
-
-
-def _st_extent_build(col: Column | str, meta: GeometryMeta) -> Column:
     b = st_bbox(col, meta)
     agg = F.struct(
         F.min(b["xmin"]).alias("xmin"),

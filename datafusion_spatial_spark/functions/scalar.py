@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datafusion_spatial_spark import wkb as _wkb
+from datafusion_spatial_spark.exprlit import col_sql
 from datafusion_spatial_spark.meta import (
     NESTING_DEPTH,
     GeometryMeta,
@@ -50,6 +51,7 @@ _BBOX_TYPE = T.StructType(
         T.StructField("ymax", T.DoubleType()),
     ]
 )
+_BBOX_SQL_TYPE = "STRUCT<xmin: DOUBLE, ymin: DOUBLE, xmax: DOUBLE, ymax: DOUBLE>"
 
 
 def _c(col: Column | str) -> Column:
@@ -278,19 +280,16 @@ def _wkb_envelope_udf(s: pd.Series) -> pd.Series:
 def st_bbox(col: Column | str, meta: GeometryMeta) -> Column:
     """Per-row ``struct{xmin,ymin,xmax,ymax}``; null for null/empty input.
     The per-row half of the reference's min_max_2d fold (src/compute.rs:11-76).
-    """
+
+    A native column given by name is rendered as SQL (:func:`bbox_sql`);
+    the Column form below serves computed Column operands (nested
+    SpatialSQL calls, ``envelope_astext``)."""
     if isinstance(col, str):
-        # (name, meta) fully determines the tree — memoize it (exprcache):
-        # this builder sits on every spatial-join/extent build path
-        from datafusion_spatial_spark.exprcache import cached_columns
-
-        return cached_columns(
-            ("st_bbox", col, meta), lambda: _st_bbox_build(F.col(col), meta)
-        )
-    return _st_bbox_build(col, meta)
-
-
-def _st_bbox_build(col: Column, meta: GeometryMeta) -> Column:
+        if meta.is_native:
+            # one F.expr: this builder sits on every spatial-join/extent
+            # build path, and the Column form costs ~40 ms of py4j calls
+            return F.expr(bbox_sql(col_sql(col), meta))
+        col = F.col(col)
     if meta.is_wkb:
         # a pandas struct UDF can't emit a NULL struct (only null fields) —
         # normalize all-null rows to a NULL struct here
@@ -307,6 +306,44 @@ def _st_bbox_build(col: Column, meta: GeometryMeta) -> Column:
         F.array_max(ys).alias("ymax"),
     )
     return F.when(col.isNull() | (F.size(coords) == 0), F.lit(None).cast(_BBOX_TYPE)).otherwise(box)
+
+
+def _separated_sql(g: str, meta: GeometryMeta) -> str:
+    """SQL text of :func:`~datafusion_spatial_spark.meta.to_separated`."""
+    if meta.coord_layout != "interleaved":
+        return g
+    names = ["x", "y"] + (["z"] if meta.has_z else []) + (["m"] if meta.has_m else [])
+
+    def c2s(c: str) -> str:
+        return "named_struct(" + ", ".join(
+            f"'{n}', {c}[{i}]" for i, n in enumerate(names)
+        ) + ")"
+
+    depth = NESTING_DEPTH[meta.native_type]
+    if depth == 0:
+        fields = ", ".join(f"{n}: DOUBLE" for n in names)
+        return f"CASE WHEN {g} IS NULL THEN CAST(NULL AS STRUCT<{fields}>) ELSE {c2s(g)} END"
+    lam = f"__c -> {c2s('__c')}"
+    for var in ("__r", "__q")[: depth - 1]:
+        lam = f"{var} -> transform({var}, {lam})"
+    return f"transform({g}, {lam})"
+
+
+def bbox_sql(operand: str, meta: GeometryMeta) -> str:
+    """SQL text of the native :func:`st_bbox` of ``operand`` (SQL text):
+    the same expression tree the Column form builds, in one ``F.expr``."""
+    g = _separated_sql(f"({operand})", meta)
+    depth = NESTING_DEPTH[meta.native_type]
+    flat = (f"array({g})", g, f"flatten({g})", f"flatten(flatten({g}))")[depth]
+    coords = f"filter({flat}, __p -> NOT (isnan(__p.x) OR isnan(__p.y)))"
+    xs = f"transform({coords}, __p -> __p.x)"
+    ys = f"transform({coords}, __p -> __p.y)"
+    return (
+        f"CASE WHEN {g} IS NULL OR size({coords}) = 0 "
+        f"THEN CAST(NULL AS {_BBOX_SQL_TYPE}) "
+        f"ELSE struct(array_min({xs}) AS xmin, array_min({ys}) AS ymin, "
+        f"array_max({xs}) AS xmax, array_max({ys}) AS ymax) END"
+    )
 
 
 @F.pandas_udf(_BBOX_TYPE)

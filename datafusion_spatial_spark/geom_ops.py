@@ -6077,8 +6077,17 @@ def _segs_3d(g: Geom):
             yield from _segs_3d(sub)
 
 
+# a*e - b*b at or below this share of a*e marks two segments as nearly
+# parallel in _seg_seg_dist3
+_PARALLEL_REL = 1e-6
+
+
 def _seg_seg_dist3(p1, q1, p2, q2) -> float:
     """Min distance between 3-D segments (clamped closest-approach)."""
+    if (p2, q2) < (p1, q1):
+        # one evaluation order for (a, b) and (b, a): the closest-approach
+        # arithmetic rounds differently when the segments swap
+        p1, q1, p2, q2 = p2, q2, p1, q1
     eps = 1e-300
 
     def sub(a, b):
@@ -6091,6 +6100,7 @@ def _seg_seg_dist3(p1, q1, p2, q2) -> float:
     a, e, f = dot3(d1, d1), dot3(d2, d2), dot3(d2, r)
     if a <= eps and e <= eps:
         return math.sqrt(dot3(r, r))
+    ends = math.inf
     if a <= eps:
         s, t = 0.0, min(1.0, max(0.0, f / e))
     else:
@@ -6100,6 +6110,17 @@ def _seg_seg_dist3(p1, q1, p2, q2) -> float:
         else:
             b = dot3(d1, d2)
             denom = a * e - b * b
+            if denom <= _PARALLEL_REL * a * e:
+                # nearly parallel: a*e - b*b cancels (to 0 below ~1e-8 rad),
+                # so s below may be noise. Parallel segments are closest at
+                # an endpoint: the four endpoint-to-segment distances (a
+                # degenerate first segment is a point) bound the result.
+                ends = min(
+                    _seg_seg_dist3(p1, p1, p2, q2),
+                    _seg_seg_dist3(q1, q1, p2, q2),
+                    _seg_seg_dist3(p2, p2, p1, q1),
+                    _seg_seg_dist3(q2, q2, p1, q1),
+                )
             s = min(1.0, max(0.0, (b * f - c * e) / denom)) if denom > eps else 0.0
             t = (b * s + f) / e
             if t < 0.0:
@@ -6109,7 +6130,7 @@ def _seg_seg_dist3(p1, q1, p2, q2) -> float:
     c1 = (p1[0] + s * d1[0], p1[1] + s * d1[1], p1[2] + s * d1[2])
     c2 = (p2[0] + t * d2[0], p2[1] + t * d2[1], p2[2] + t * d2[2])
     dd = sub(c1, c2)
-    return math.sqrt(dot3(dd, dd))
+    return min(ends, math.sqrt(dot3(dd, dd)))
 
 
 def distance_3d(a: Geom, b: Geom) -> float | None:

@@ -58,42 +58,27 @@ def asof_join(
     if direction not in ("backward", "forward"):
         raise ValueError("direction must be 'backward' or 'forward'")
 
-    from datafusion_spatial_spark.exprcache import cached_columns
-
     lcols = left.columns
     # ASOF semantics (DuckDB / pd.merge_asof): NULL keys and NULL
     # timestamps never match — drop such RIGHT rows up front (a NULL-ts
     # right row would otherwise sort NULLS-FIRST and be carried into
     # left rows that have no true prior match; r7 review fix)
-    r_filter, r_sel = cached_columns(
-        ("asof_r", on, right_ts, tuple(right_payload)),
-        lambda: (
-            F.col(on).isNotNull() & F.col(right_ts).isNotNull(),
-            (
-                F.col(on),
-                F.col(right_ts).alias("__ts"),
-                F.lit(0).alias("__side"),
-                F.struct(*[F.col(c) for c in right_payload]).alias("__payload"),
-            ),
-        ),
+    r = right.filter(F.col(on).isNotNull() & F.col(right_ts).isNotNull()).select(
+        F.col(on),
+        F.col(right_ts).alias("__ts"),
+        F.lit(0).alias("__side"),
+        F.struct(*[F.col(c) for c in right_payload]).alias("__payload"),
     )
-    r = right.filter(r_filter).select(*r_sel)
     payload_type = r.schema["__payload"].dataType
     lschema = left.schema
-    # every remaining expression is determined by names + schemas — one
-    # memoized build (exprcache) per distinct asof shape
-    shape_key = (
-        "asof_exprs", on, left_ts, direction, suffix, tuple(right_payload),
-        tuple(lcols), lschema.json(), payload_type.json(),
+    l = left.select(
+        *lcols,
+        F.col(left_ts).alias("__ts"),
+        F.lit(1).alias("__side"),
+        F.lit(None).cast(payload_type).alias("__payload"),
     )
-
-    def _build_exprs():
-        l_extra = (
-            F.col(left_ts).alias("__ts"),
-            F.lit(1).alias("__side"),
-            F.lit(None).cast(payload_type).alias("__payload"),
-        )
-        union_cols = (
+    u = l.unionByName(
+        r.select(
             *[
                 F.lit(None).cast(lschema[c].dataType).alias(c)
                 for c in lcols
@@ -104,11 +89,7 @@ def asof_join(
             F.col("__side"),
             F.col("__payload"),
         )
-        return l_extra, union_cols
-
-    l_extra, union_cols = cached_columns(shape_key, _build_exprs)
-    l = left.select(*lcols, *l_extra)
-    u = l.unionByName(r.select(*union_cols))
+    )
     # final __payload term: deterministic tie-break among right rows at
     # identical (key, ts) — last() then carries the MAX payload instead of
     # whichever row Spark happened to sort last (r7 review fix). Order by
@@ -121,51 +102,35 @@ def asof_join(
     # right rows at identical (key, ts) that tie on every orderable field
     # but differ in a map column are carried deterministically too (r9
     # advice fix; previously that partial tie was left to Spark's sort).
-    def _build_window_exprs():
-        tie = [
-            F.col(f"__payload.{f.name}").asc()
-            for f in payload_type.fields
-            if _orderable(f.dataType)
-        ]
-        unorderable = [
-            f.name for f in payload_type.fields if not _orderable(f.dataType)
-        ]
-        if unorderable:
-            tie.append(
-                F.xxhash64(
-                    *[F.to_json(F.col(f"__payload.{n}")) for n in unorderable]
-                ).asc()
-            )
-        if direction == "backward":
-            # right rows (side 0) sort before left rows at equal ts ->
-            # inclusive
-            w = (
-                Window.partitionBy(on)
-                .orderBy(F.col("__ts").asc(), F.col("__side").asc(), *tie)
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-        else:
-            w = (
-                Window.partitionBy(on)
-                .orderBy(F.col("__ts").desc(), F.col("__side").asc(), *tie)
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-        carried_col = F.last("__payload", ignorenulls=True).over(w)
-        # a left row with a NULL key or NULL timestamp matches nothing (it
-        # would otherwise adopt a NULL-key partner or, under the descending
-        # forward window, the minimum-ts right row; r7 review fix)
-        match = F.when(
-            F.col(on).isNotNull() & F.col("__ts").isNotNull(), F.col("__match")
+    tie = [
+        F.col(f"__payload.{f.name}").asc()
+        for f in payload_type.fields
+        if _orderable(f.dataType)
+    ]
+    unorderable = [
+        f.name for f in payload_type.fields if not _orderable(f.dataType)
+    ]
+    if unorderable:
+        tie.append(
+            F.xxhash64(
+                *[F.to_json(F.col(f"__payload.{n}")) for n in unorderable]
+            ).asc()
         )
-        side_filter = F.col("__side") == 1
-        out_payload = tuple(
-            match[c].alias(f"{c}{suffix}") for c in right_payload
-        )
-        return carried_col, side_filter, out_payload
-
-    carried_col, side_filter, out_payload = cached_columns(
-        ("asof_window",) + shape_key, _build_window_exprs
+    # backward: right rows (side 0) sort before left rows at equal ts ->
+    # inclusive
+    ts_order = F.col("__ts").asc() if direction == "backward" else F.col("__ts").desc()
+    w = (
+        Window.partitionBy(on)
+        .orderBy(ts_order, F.col("__side").asc(), *tie)
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    carried = u.withColumn("__match", carried_col)
-    out = carried.filter(side_filter).select(*lcols, *out_payload)
-    return out
+    carried = u.withColumn("__match", F.last("__payload", ignorenulls=True).over(w))
+    # a left row with a NULL key or NULL timestamp matches nothing (it
+    # would otherwise adopt a NULL-key partner or, under the descending
+    # forward window, the minimum-ts right row; r7 review fix)
+    match = F.when(
+        F.col(on).isNotNull() & F.col("__ts").isNotNull(), F.col("__match")
+    )
+    return carried.filter(F.col("__side") == 1).select(
+        *lcols, *[match[c].alias(f"{c}{suffix}") for c in right_payload]
+    )

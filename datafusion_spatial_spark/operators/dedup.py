@@ -35,13 +35,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from datafusion_spatial_spark.exprlit import col_sql, render_str
 from datafusion_spatial_spark.operators.hashing import (
     P,
     minhash_affine_params,
-    poly_hash_list,
+    poly_hash_list_sql,
     poly_hash_str,
+    poly_hash_str_sql,
 )
-from datafusion_spatial_spark.exprcache import cached_columns
 from datafusion_spatial_spark.operators.skew import ensure_min_parallelism
 
 
@@ -50,6 +51,15 @@ def _hash_str(col: Column, hash_fn: str) -> Column:
         return poly_hash_str(col)
     if hash_fn == "xxhash64":
         return F.xxhash64(col)
+    raise ValueError(f"unknown hash_fn {hash_fn!r}")
+
+
+def _hash_str_sql(expr: str, hash_fn: str) -> str:
+    """SQL text of :func:`_hash_str`."""
+    if hash_fn == "poly":
+        return poly_hash_str_sql(expr)
+    if hash_fn == "xxhash64":
+        return f"xxhash64({expr})"
     raise ValueError(f"unknown hash_fn {hash_fn!r}")
 
 
@@ -109,6 +119,18 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     return let(F.split(F.trim(c), r"\s+"), shingles)
 
 
+_WS_SQL = render_str(r"\s+")
+
+
+def word_shingles_sql(expr: str, k: int = 3) -> str:
+    """Spark SQL text of :func:`word_shingles` over ``expr``."""
+    return (
+        f"transform(array(split(trim({expr}), {_WS_SQL})), "
+        f"__w -> transform(sequence(1, greatest(size(__w) - {k - 1}, 1)), "
+        f"__i -> array_join(slice(__w, __i, {k}), ' ')))[0]"
+    )
+
+
 def word_shingles_duckdb(expr: str, k: int = 3) -> str:
     """DuckDB SQL text computing the identical shingle list."""
     w = f"regexp_split_to_array(trim({expr}), '\\s+')"
@@ -141,31 +163,19 @@ def minhash_signature(
     16 affine mins don't re-shingle/re-hash the text 16× — Catalyst does not
     CSE across lambda bodies. ``hs`` is de-duplicated (min is set-insensitive)
     and kept in the output for downstream exact-Jaccard verification.
+
+    Both projections are SQL text (one ``selectExpr`` each): through the
+    Column API the 16 lambdas cost ~0.2 s of py4j round trips per build.
     """
     df = ensure_min_parallelism(df)  # shingling is the CPU-heavy map stage
-
-    def _build():
-        params = minhash_affine_params(num_hashes, seed)
-        sh = word_shingles(text_col, shingle_k)
-        hs = F.array_distinct(
-            F.transform(sh, lambda s: F.pmod(_hash_str(s, hash_fn), F.lit(P)))
-        ).alias("hs")
-
-        def affine(a: int, b: int):
-            return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(P)
-
-        sig = F.array(
-            *[F.array_min(F.transform(F.col("hs"), affine(a, b))) for a, b in params]
-        ).alias("sig")
-        return hs, sig
-
-    # ~0.6 s of py4j round trips per build (16 HOF lambdas) — memoized on
-    # the name/param key (exprcache)
-    hs, sig = cached_columns(
-        ("minhash_sig", text_col, num_hashes, shingle_k, hash_fn, seed), _build
+    sh = word_shingles_sql(col_sql(text_col), shingle_k)
+    hs = f"array_distinct(transform({sh}, __s -> pmod({_hash_str_sql('__s', hash_fn)}, {P})))"
+    sig = ", ".join(
+        f"array_min(transform(hs, __h -> (__h * {a} + {b}) % {P}))"
+        for a, b in minhash_affine_params(num_hashes, seed)
     )
-    base = df.select(F.col(id_col), hs)
-    return base.select(F.col(id_col), F.col("hs"), sig)
+    idc = col_sql(id_col)
+    return df.selectExpr(idc, f"{hs} AS hs").selectExpr(idc, "hs", f"array({sig}) AS sig")
 
 
 def lsh_candidate_pairs(
@@ -184,20 +194,14 @@ def lsh_candidate_pairs(
     bucket key for the self-join. AQE's skew-join splitting handles hot
     buckets; for adversarial data cap bucket size upstream.
     """
-    band_idx, band_hash = cached_columns(
-        ("lsh_band", bands, rows_per_band),
-        lambda: (
-            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-            poly_hash_list(
-                F.slice(
-                    F.col("sig"), F.col("band") * rows_per_band + 1, rows_per_band
-                )
-            ),
-        ),
+    band_hash = poly_hash_list_sql(
+        f"slice(sig, band * {rows_per_band} + 1, {rows_per_band})"
     )
     banded = (
-        sig_df.select(F.col(id_col), F.col("sig"), band_idx)
-        .withColumn("band_hash", band_hash)
+        sig_df.selectExpr(
+            col_sql(id_col), "sig", f"explode(sequence(0, {bands - 1})) AS band"
+        )
+        .withColumn("band_hash", F.expr(band_hash))
         .select(id_col, "band", "band_hash")
     )
     if max_bucket is not None:
@@ -253,11 +257,7 @@ def minhash_lsh_dedup_pairs(
         .join(shing.withColumnRenamed(id_col, "id_b").withColumnRenamed("hs", "hs_b"), "id_b")
         .withColumn(
             "jaccard",
-            cached_columns(
-                ("minhash_jaccard",),
-                lambda: F.size(F.array_intersect("hs_a", "hs_b"))
-                / F.size(F.array_union("hs_a", "hs_b")),
-            ),
+            F.expr("size(array_intersect(hs_a, hs_b)) / size(array_union(hs_a, hs_b))"),
         )
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")

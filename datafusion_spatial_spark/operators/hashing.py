@@ -44,24 +44,17 @@ def poly_hash_str(col: Column | str) -> Column:
     )
 
 
-def poly_hash_list(col: Column | str) -> Column:
-    """Polynomial hash of an array<bigint>, mod P."""
-    return F.aggregate(
-        _c(col),
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * F.lit(SEQ_MULT) + x.cast("long")) % F.lit(P),
-    )
-
-
-# --- SQL-text twins (shared with the DuckDB oracle) -----------------------
+# --- SQL text (Spark, and the DuckDB oracle's mirrors) --------------------
+#
+# ``expr`` is SQL text; it sits outside every lambda body, so these embed
+# inside another lambda (e.g. over a shingle variable) unchanged.
 
 
 def poly_hash_str_sql(expr: str) -> str:
-    """Spark SQL text computing poly_hash_str(expr)."""
+    """Spark SQL text of :func:`poly_hash_str` (the same tree)."""
     return (
-        f"aggregate(transform(sequence(1, length({expr})), "
-        f"i -> cast(ascii(substring({expr}, i, 1)) as bigint)), "
-        f"cast(0 as bigint), (acc, x) -> (acc * {CHAR_MULT} + x) % {P})"
+        f"aggregate(transform(split({expr}, ''), __ch -> cast(ascii(__ch) as bigint)), "
+        f"cast(0 as bigint), (__acc, __x) -> (__acc * {CHAR_MULT} + __x) % {P})"
     )
 
 
@@ -76,9 +69,10 @@ def poly_hash_str_duckdb(expr: str) -> str:
 
 
 def poly_hash_list_sql(expr: str) -> str:
+    """Polynomial hash of an array<bigint>, mod P."""
     return (
         f"aggregate({expr}, cast(0 as bigint), "
-        f"(acc, x) -> (acc * {SEQ_MULT} + cast(x as bigint)) % {P})"
+        f"(__acc, __x) -> (__acc * {SEQ_MULT} + cast(__x as bigint)) % {P})"
     )
 
 

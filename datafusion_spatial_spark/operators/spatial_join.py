@@ -41,8 +41,8 @@ from datafusion_spatial_spark.functions.predicates import (
     st_intersects,
     st_within,
 )
-from datafusion_spatial_spark.exprcache import cached_columns
-from datafusion_spatial_spark.functions.scalar import st_bbox
+from datafusion_spatial_spark.exprlit import col_sql, quote_col, render_double
+from datafusion_spatial_spark.functions.scalar import bbox_sql, st_bbox
 from datafusion_spatial_spark.meta import GeometryMeta
 
 _PREDICATES = {
@@ -56,22 +56,62 @@ _PREDICATES = {
 }
 
 
-def _cells(b: Column, cell_size: float, pad: float = 0.0) -> Column:
-    """array<bigint> of flattened cell ids covered by bbox ``b`` (struct
+# The grid expressions below are SQL text, each parsed in one call
+# (selectExpr, filter or F.expr): the Column API costs one py4j round trip
+# per node, and a dwithin join with a new distance rebuilds every one of
+# them. Operands are SQL text and are parenthesised where they are used.
+
+
+def _cells_sql(box: str, cell_size: float, pad: float = 0.0) -> str:
+    """array<bigint> of flattened cell ids covered by bbox ``box`` (struct
     xmin..ymax), optionally padded (for distance joins)."""
-    cs = F.lit(float(cell_size))
-    x0 = F.floor((b["xmin"] - pad) / cs).cast("long")
-    x1 = F.floor((b["xmax"] + pad) / cs).cast("long")
-    y0 = F.floor((b["ymin"] - pad) / cs).cast("long")
-    y1 = F.floor((b["ymax"] + pad) / cs).cast("long")
+    cs, p = render_double(cell_size), render_double(pad)
+
+    def cell(field: str, op: str) -> str:
+        return f"CAST(floor((({box}).{field} {op} {p}) / {cs}) AS BIGINT)"
+
     # interleave into one id: cell = x * 2^32 + y (grid coords fit in int32
     # for any realistic extent/cell-size combination)
-    return F.flatten(
-        F.transform(
-            F.sequence(x0, x1),
-            lambda x: F.transform(F.sequence(y0, y1), lambda y: x * F.lit(1 << 32) + y),
-        )
+    return (
+        f"flatten(transform(sequence({cell('xmin', '-')}, {cell('xmax', '+')}), "
+        f"__x -> transform(sequence({cell('ymin', '-')}, {cell('ymax', '+')}), "
+        f"__y -> __x * {1 << 32} + __y)))"
     )
+
+
+def _cand_filter_sql(
+    lbox: str, rbox: str, cell: str, cell_size: float, pad: float
+) -> str:
+    """The candidate filter of a grid join: the bbox prefilter AND the
+    canonical-cell filter (the optimizer folds two adjacent filters into
+    this same conjunction).
+
+    Canonical reference cell: the cell of the min corner of the padded
+    bbox intersection. floor is monotonic, so greatest(floor(a),floor(b))
+    == floor(greatest(a,b)); once the bbox prefilter holds, this cell is
+    inside BOTH sides' cell ranges, so each pair survives exactly once —
+    dedup as a map-side filter, not an exchange."""
+    cs, p = render_double(cell_size), render_double(pad)
+    lb, rb = f"({lbox})", f"({rbox})"
+    prefilter = (
+        f"{lb}.xmin - {p} <= {rb}.xmax AND {rb}.xmin <= {lb}.xmax + {p} "
+        f"AND {lb}.ymin - {p} <= {rb}.ymax AND {rb}.ymin <= {lb}.ymax + {p}"
+    )
+
+    def canon(field: str) -> str:
+        return (
+            f"CAST(greatest(floor(({lb}.{field} - {p}) / {cs}), "
+            f"floor({rb}.{field} / {cs})) AS BIGINT)"
+        )
+
+    return f"{prefilter} AND ({cell}) = {canon('xmin')} * {1 << 32} + {canon('ymin')}"
+
+
+# exact point×point distance: a point's bbox IS the point
+_PT_DIST_SQL = (
+    "sqrt((__lbox.xmin - __rbox.xmin) * (__lbox.xmin - __rbox.xmin) "
+    "+ (__lbox.ymin - __rbox.ymin) * (__lbox.ymin - __rbox.ymin))"
+)
 
 
 def spatial_join(
@@ -109,67 +149,28 @@ def spatial_join(
     carry_geom = not (
         both_points and predicate in ("dwithin", "dwithin_sphere")
     )
-    def _side_cols(gid: str, geom: str, meta, side: str):
-        cols = [F.col(gid).alias(f"__{side}id"),
-                st_bbox(geom, meta).alias(f"__{side}box")]
+    def _side(df: DataFrame, gid: str, geom: str, meta, side: str) -> DataFrame:
+        cols = [f"{col_sql(gid)} AS __{side}id"]
         if carry_geom:
-            cols.insert(1, F.col(geom).alias(f"__{side}geom"))
-        return tuple(cols)
+            cols.append(f"{col_sql(geom)} AS __{side}geom")
+        if meta.is_native:
+            # one selectExpr: ~35 fewer py4j calls per join build than
+            # the per-column F.expr form below
+            out = df.selectExpr(*cols, f"{bbox_sql(col_sql(geom), meta)} AS __{side}box")
+        else:
+            out = df.select(*map(F.expr, cols), st_bbox(geom, meta).alias(f"__{side}box"))
+        return out.filter(f"__{side}box IS NOT NULL")
 
-    # expression groups below are fully determined by column NAMES +
-    # numeric params — memoized (exprcache; ~0.5 s of py4j per build)
-    lcols = cached_columns(
-        ("sj_side", left_id, left_geom, left_meta, carry_geom, "l"),
-        lambda: _side_cols(left_id, left_geom, left_meta, "l"),
+    lc = _side(left, left_id, left_geom, left_meta, "l").selectExpr(
+        "*", f"explode({_cells_sql('__lbox', cell_size, pad)}) AS __cell"
     )
-    rcols = cached_columns(
-        ("sj_side", right_id, right_geom, right_meta, carry_geom, "r"),
-        lambda: _side_cols(right_id, right_geom, right_meta, "r"),
-    )
-    lb = left.select(*lcols).filter(F.col("__lbox").isNotNull())
-    rb = right.select(*rcols).filter(F.col("__rbox").isNotNull())
-
-    lcell, rcell = cached_columns(
-        ("sj_cells", float(cell_size), pad),
-        lambda: (
-            F.explode(_cells(F.col("__lbox"), cell_size, pad)).alias("__cell"),
-            F.explode(_cells(F.col("__rbox"), cell_size)).alias("__cell"),
-        ),
-    )
-    lc = lb.select("*", lcell)
-    rc = rb.select("*", rcell)
-
-    # canonical reference cell: the cell of the min corner of the padded
-    # bbox intersection.  floor is monotonic, so greatest(floor(a),floor(b))
-    # == floor(greatest(a,b)); once the bbox prefilter holds, this cell is
-    # inside BOTH sides' cell ranges, so each pair survives exactly once —
-    # dedup as a map-side filter, not an exchange.
-    def _cand_filters():
-        cs = F.lit(float(cell_size))
-        canon_x = F.greatest(
-            F.floor((F.col("__lbox.xmin") - pad) / cs),
-            F.floor(F.col("__rbox.xmin") / cs),
-        ).cast("long")
-        canon_y = F.greatest(
-            F.floor((F.col("__lbox.ymin") - pad) / cs),
-            F.floor(F.col("__rbox.ymin") / cs),
-        ).cast("long")
-        prefilter = (
-            (F.col("__lbox.xmin") - pad <= F.col("__rbox.xmax"))
-            & (F.col("__rbox.xmin") <= F.col("__lbox.xmax") + pad)
-            & (F.col("__lbox.ymin") - pad <= F.col("__rbox.ymax"))
-            & (F.col("__rbox.ymin") <= F.col("__lbox.ymax") + pad)
-        )
-        return prefilter, F.col("__cell") == canon_x * F.lit(1 << 32) + canon_y
-
-    prefilter, canon_filter = cached_columns(
-        ("sj_cand", float(cell_size), pad), _cand_filters
+    rc = _side(right, right_id, right_geom, right_meta, "r").selectExpr(
+        "*", f"explode({_cells_sql('__rbox', cell_size)}) AS __cell"
     )
     cand = (
         lc.join(rc, "__cell")
         # bbox prefilter kills most false candidates JVM-side
-        .filter(prefilter)
-        .filter(canon_filter)
+        .filter(_cand_filter_sql("__lbox", "__rbox", "__cell", cell_size, pad))
         .select(
             "__lid", "__rid",
             *(("__lgeom", "__rgeom") if carry_geom else ("__lbox", "__rbox")),
@@ -195,74 +196,45 @@ def _refine(
 ) -> DataFrame:
     """Exact-refine candidate pairs (columns __lid/__rid and __lgeom/__rgeom
     or __lbox/__rbox) — shared by the shuffle and bucketed join paths."""
-    if predicate == "dwithin_sphere":
-        if distance is None:
-            raise ValueError("dwithin_sphere requires distance= (meters)")
-        if both_points:
+    ids = (f"__lid AS {quote_col(left_id)}", f"__rid AS {quote_col(right_id)}")
+    if predicate in ("dwithin", "dwithin_sphere"):
+        if predicate == "dwithin_sphere":
+            if distance is None:
+                raise ValueError("dwithin_sphere requires distance= (meters)")
             from datafusion_spatial_spark.functions.geodesic import (
                 _haversine_expr,
-            )
-
-            dcol = cached_columns(
-                ("sj_hav",),
-                lambda: _haversine_expr(
-                    F.col("__lbox.xmin"), F.col("__lbox.ymin"),
-                    F.col("__rbox.xmin"), F.col("__rbox.ymin"),
-                ),
-            )
-        else:
-            # arbitrary geometries: exact vertex-vs-arc spherical minimum
-            # (candidate pairs only — the degree grid already pruned)
-            from datafusion_spatial_spark.functions.geodesic import (
                 st_distancesphere_geoms,
             )
 
-            dcol = cached_columns(
-                ("sj_sphere_dist", left_meta, right_meta),
-                lambda: st_distancesphere_geoms(
+            dist_name = "distance_m"
+            if both_points:
+                dcol = _haversine_expr(
+                    F.col("__lbox.xmin"), F.col("__lbox.ymin"),
+                    F.col("__rbox.xmin"), F.col("__rbox.ymin"),
+                )
+            else:
+                # arbitrary geometries: exact vertex-vs-arc spherical
+                # minimum (candidate pairs only — the degree grid already
+                # pruned)
+                dcol = st_distancesphere_geoms(
                     "__lgeom", "__rgeom", left_meta, right_meta
-                ),
-            )
-        if with_distance:
-            return (
-                cand.withColumn("__dist", dcol)
-                .filter(F.col("__dist") <= F.lit(float(distance)))
-                .select(
-                    F.col("__lid").alias(left_id),
-                    F.col("__rid").alias(right_id),
-                    F.col("__dist").alias("distance_m"),
                 )
-            )
-        return cand.filter(dcol <= F.lit(float(distance))).select(
-            F.col("__lid").alias(left_id), F.col("__rid").alias(right_id)
-        )
-    if predicate == "dwithin":
-        if distance is None:
-            raise ValueError("dwithin requires distance=")
-        if both_points:
-            # pure-Catalyst refine: a point's bbox IS the point, so the
-            # exact distance needs no geometry decode and no Python — the
-            # whole join plan stays inside whole-stage codegen
-            def _pt_dist():
-                dx = F.col("__lbox.xmin") - F.col("__rbox.xmin")
-                dy = F.col("__lbox.ymin") - F.col("__rbox.ymin")
-                return F.sqrt(dx * dx + dy * dy)
-
-            dcol = cached_columns(("sj_pt_dist",), _pt_dist)
         else:
-            dcol = cached_columns(
-                ("sj_geom_dist", left_meta, right_meta),
-                lambda: st_distance("__lgeom", "__rgeom", left_meta, right_meta),
-            )
+            if distance is None:
+                raise ValueError("dwithin requires distance=")
+            dist_name = "distance"
+            if both_points:
+                # pure-Catalyst refine: a point's bbox IS the point, so the
+                # exact distance needs no geometry decode and no Python —
+                # the whole join plan stays inside whole-stage codegen
+                dcol = F.expr(_PT_DIST_SQL)
+            else:
+                dcol = st_distance("__lgeom", "__rgeom", left_meta, right_meta)
         if with_distance:
             return (
                 cand.withColumn("__dist", dcol)
-                .filter(F.col("__dist") <= F.lit(float(distance)))
-                .select(
-                    F.col("__lid").alias(left_id),
-                    F.col("__rid").alias(right_id),
-                    F.col("__dist").alias("distance"),
-                )
+                .filter(f"__dist <= {render_double(distance)}")
+                .selectExpr(*ids, f"__dist AS {dist_name}")
             )
         keep = dcol <= F.lit(float(distance))
     else:
@@ -272,14 +244,9 @@ def _refine(
             raise ValueError(
                 f"unknown predicate {predicate!r}; one of {sorted(_PREDICATES)} or 'dwithin'"
             ) from None
-        keep = cached_columns(
-            ("sj_pred", predicate, left_meta, right_meta),
-            lambda: pred("__lgeom", "__rgeom", left_meta, right_meta),
-        )
+        keep = pred("__lgeom", "__rgeom", left_meta, right_meta)
 
-    return cand.filter(keep).select(
-        F.col("__lid").alias(left_id), F.col("__rid").alias(right_id)
-    )
+    return cand.filter(keep).selectExpr(*ids)
 
 
 def spatial_join_broadcast(
@@ -414,7 +381,7 @@ def write_spatial_bucketed(
             st_bbox(geom_col, meta).alias("box"),
         )
         .filter(F.col("box").isNotNull())
-        .withColumn("cell", F.explode(_cells(F.col("box"), cell_size, pad)))
+        .withColumn("cell", F.expr(f"explode({_cells_sql('box', cell_size, pad)})"))
     )
     write_bucketed(
         dfx, table, ["cell"], num_buckets, sort_cols=["cell"],
@@ -496,15 +463,6 @@ def spatial_join_bucketed(
     right = spark.table(right_table).alias("r")
     if hint:
         left = left.hint(hint)
-    cs = F.lit(float(cell_size))
-    canon_x = F.greatest(
-        F.floor((F.col("l.box.xmin") - pad) / cs),
-        F.floor(F.col("r.box.xmin") / cs),
-    ).cast("long")
-    canon_y = F.greatest(
-        F.floor((F.col("l.box.ymin") - pad) / cs),
-        F.floor(F.col("r.box.ymin") / cs),
-    ).cast("long")
     both_points = (
         left_meta.is_native and left_meta.native_type == "Point"
         and right_meta.is_native and right_meta.native_type == "Point"
@@ -512,13 +470,7 @@ def spatial_join_bucketed(
     carry_geom = not (both_points and predicate == "dwithin")
     cand = (
         left.join(right, F.col("l.cell") == F.col("r.cell"))
-        .filter(
-            (F.col("l.box.xmin") - pad <= F.col("r.box.xmax"))
-            & (F.col("r.box.xmin") <= F.col("l.box.xmax") + pad)
-            & (F.col("l.box.ymin") - pad <= F.col("r.box.ymax"))
-            & (F.col("r.box.ymin") <= F.col("l.box.ymax") + pad)
-        )
-        .filter(F.col("l.cell") == canon_x * F.lit(1 << 32) + canon_y)
+        .filter(_cand_filter_sql("l.box", "r.box", "l.cell", cell_size, pad))
         .select(
             F.col("l.id").alias("__lid"),
             F.col("r.id").alias("__rid"),
@@ -1288,29 +1240,12 @@ def _polar_cap_join(
     pad = (meters * k_max + allow) * (1.0 + 1e-9)
     cell = 4.0 * pad
 
-    lc = lp.withColumn(
-        "__cell", F.explode(_cells(F.col("__pbox"), cell, pad))
-    )
-    rc = rp.withColumn("__cell", F.explode(_cells(F.col("__pbox"), cell)))
-    cs = F.lit(float(cell))
-    canon_x = F.greatest(
-        F.floor((F.col("l.__pbox.xmin") - pad) / cs),
-        F.floor(F.col("r.__pbox.xmin") / cs),
-    ).cast("long")
-    canon_y = F.greatest(
-        F.floor((F.col("l.__pbox.ymin") - pad) / cs),
-        F.floor(F.col("r.__pbox.ymin") / cs),
-    ).cast("long")
+    lc = lp.withColumn("__cell", F.expr(f"explode({_cells_sql('__pbox', cell, pad)})"))
+    rc = rp.withColumn("__cell", F.expr(f"explode({_cells_sql('__pbox', cell)})"))
     cand = (
         lc.alias("l")
         .join(rc.alias("r"), F.col("l.__cell") == F.col("r.__cell"))
-        .filter(
-            (F.col("l.__pbox.xmin") - pad <= F.col("r.__pbox.xmax"))
-            & (F.col("r.__pbox.xmin") <= F.col("l.__pbox.xmax") + pad)
-            & (F.col("l.__pbox.ymin") - pad <= F.col("r.__pbox.ymax"))
-            & (F.col("r.__pbox.ymin") <= F.col("l.__pbox.ymax") + pad)
-        )
-        .filter(F.col("l.__cell") == canon_x * F.lit(1 << 32) + canon_y)
+        .filter(_cand_filter_sql("l.__pbox", "r.__pbox", "l.__cell", cell, pad))
         # leg disjointness: both-mid pairs belong to the mid leg
         .filter(F.col("l.__capint") | F.col("r.__capint"))
         .select(

@@ -16,8 +16,7 @@ query function re-loads its tables. ``load_table`` now memoizes the
 *unexecuted DataFrame* (the analyzed logical plan — a table resolution,
 exactly what a SQL catalog does) per live SparkSession and real path.
 This caches NO data and NO results: every action on the returned frame
-still scans the parquet files. Set ``SPARK_GRAFT_NO_RELATION_CACHE=1`` to
-disable.
+still scans the parquet files.
 
 **Contract (r16, VERDICT r15 #8): the directories passed to ``load_table``
 are immutable for the lifetime of the session.** The memoized frame holds
@@ -26,8 +25,8 @@ directory afterwards are invisible to it (exactly like a catalog table
 whose manifest predates the mutation). Every current call site passes
 write-once fixture dirs (driver testdata + .scale copies). For a mutable
 directory — e.g. a streaming-ingest landing zone at production scale —
-either disable the cache or call :func:`invalidate_relations` after the
-mutation; pinned by tests/test_relation_cache_r16.py.
+call :func:`invalidate_relations` after the mutation; pinned by
+tests/test_relation_cache_r16.py.
 
 View names in ``TABLES`` are reserved for :func:`register_views`: the skip
 logic re-validates against the live catalog, so an outside
@@ -69,10 +68,6 @@ _VIEWS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 )
 
 
-def _cache_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_NO_RELATION_CACHE", "") != "1"
-
-
 def _ensure_session_confs(spark: SparkSession) -> None:
     """Defensive runtime confs: the caller's session (e.g. the driver's) may
     not have gone through session.get_spark. Both are runtime-settable SQL
@@ -93,8 +88,6 @@ def _load_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if not _cache_enabled():
-        return _load_uncached(spark, sf_dir, name)
     key = (os.path.realpath(sf_dir), name)
     per_session = _RELATIONS.setdefault(spark, {})
     df = per_session.get(key)
@@ -114,18 +107,12 @@ def invalidate_relations(spark: SparkSession) -> None:
 
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     real = os.path.realpath(sf_dir)
-    # the dict is maintained even when the cache is disabled (ADVICE r15:
-    # a mid-session toggle must not leave _VIEWS stale), but the skip is
-    # only taken when enabled, and only after confirming the view still
-    # exists in the live catalog (an outside dropTempView is repaired).
+    # skip a view that already points at this directory, but only after
+    # confirming it still exists in the live catalog (an outside
+    # dropTempView is repaired)
     seen = _VIEWS.setdefault(spark, {})
-    skip_ok = _cache_enabled()
     for name in names or TABLES:
-        if (
-            skip_ok
-            and seen.get(name) == real
-            and spark.catalog.tableExists(name)
-        ):
+        if seen.get(name) == real and spark.catalog.tableExists(name):
             continue
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
         seen[name] = real

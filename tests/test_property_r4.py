@@ -81,6 +81,17 @@ def test_3d_distance_symmetric_and_z_lower_bound(p1, q1, p2, q2):
     assert dab >= gap - 1e-9
 
 
+def test_3d_distance_nearly_parallel_fixed_pair():
+    """a*e - b*b cancels to 0 for this pair: both argument orders must give
+    the true minimum, the z of segment 1 above y = 1 (15/16 of its start
+    height)."""
+    a = wkb.Geom("LineString", [(0.0, 0.0, 1.192092896e-07), (0.0, 16.0, 0.0)], True)
+    b = wkb.Geom("LineString", [(0.0, 1.0, 0.0), (0.0, 0.0, 0.0)], True)
+    want = 1.192092896e-07 * 15.0 / 16.0
+    assert G.distance_3d(a, b) == G.distance_3d(b, a)
+    assert abs(G.distance_3d(a, b) - want) < 1e-15
+
+
 @settings(max_examples=40, deadline=None)
 @given(
     st.floats(min_value=-179.0, max_value=178.0, allow_nan=False),

@@ -1,7 +1,7 @@
 """Relation-cache contract (r15 optimization): load_table memoizes the
 unexecuted DataFrame per (session, realpath, table) — no data/result
 caching — and register_views skips redundant view re-registration while
-staying correct across sf_dir switches and the kill-switch."""
+staying correct across sf_dir switches."""
 
 import os
 
@@ -38,13 +38,6 @@ def test_cache_is_not_result_caching(spark):
     fresh = T._load_uncached(spark, SF1, "nation")
     rows3 = sorted(r.n_nationkey for r in fresh.select("n_nationkey").collect())
     assert rows1 == rows2 == rows3
-
-
-def test_kill_switch(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_RELATION_CACHE", "1")
-    a = T.load_table(spark, SF1, "region")
-    b = T.load_table(spark, SF1, "region")
-    assert a is not b
 
 
 def test_register_views_switches_dirs(spark):
